@@ -38,10 +38,41 @@ def host_col(url_col: str | F.Column = "fetch_url") -> F.Column:
     return F.nullif(F.lower(F.translate(host, "[]", "")), F.lit(""))
 
 
+#: the per-host selection flag a ranked frontier carries
+#: (:func:`rank_host_budget`): true for the rows within their host's budget
+SELECTED = "__selected"
+
+
 def apply_host_budget(frontier: DataFrame, budget: int | None,
                       salt_buckets: int = 16,
-                      priority_expr: str | None = None):
+                      priority_expr: str | None = None,
+                      rows: int | None = None):
     """Split the frontier into (selected, deferred) by per-host rank.
+
+    A frontier that already carries the :data:`SELECTED` flag (the crawl
+    loop ranks each next frontier in the job that materializes it) is split
+    by two filters on that column; any other is ranked here, lazily, by
+    :func:`rank_host_budget`. ``deferred`` is None when nothing can be
+    deferred: there is no budget, or the caller knows the frontier's row
+    count ``rows`` and no host can exceed the budget.
+    """
+    if budget is None:
+        return frontier, None
+    if SELECTED not in frontier.columns:
+        if rows is not None and rows <= budget:
+            return frontier, None
+        frontier = rank_host_budget(frontier, budget, salt_buckets,
+                                    priority_expr)
+    flag = F.col(SELECTED)
+    return (frontier.filter(flag).drop(SELECTED),
+            frontier.filter(~flag).drop(SELECTED))
+
+
+def rank_host_budget(frontier: DataFrame, budget: int,
+                     salt_buckets: int = 16,
+                     priority_expr: str | None = None) -> DataFrame:
+    """The frontier plus the :data:`SELECTED` flag: the row is among its
+    host's first ``budget`` rows.
 
     Rank order is the canonical visit order (order_key), so deferral never
     reorders the crawl — deferred rows keep their order_key and sort ahead of
@@ -62,17 +93,13 @@ def apply_host_budget(frontier: DataFrame, budget: int | None,
 
     1. pre-rank within (host, salt): any row whose true per-host rank is
        <= budget also has salt-local rank <= budget (a salt bucket holds a
-       subsequence), so filtering salt-rank <= budget never drops a winner —
-       it only bounds the survivors to budget*salt_buckets per host;
+       subsequence), so a row with salt-rank > budget is never selected;
     2. exact re-rank over the survivors picks the true top ``budget``.
 
     The heavy phase-1 window spreads a mega-host over ``salt_buckets``
-    tasks; phase 2 touches at most budget*salt_buckets rows per host.
-    Deferred rows are everything not selected (computed by rank on the same
-    exact window shape over the pre-filtered complement union).
+    tasks; phase 2 touches at most budget*salt_buckets rows per host, and
+    the phase-1 losers join them unflagged, with no second shuffle.
     """
-    if budget is None:
-        return frontier, None
     host = host_col()
     # A fixed total order per host: priority desc first (when given), then
     # the canonical order_key. The salted two-phase trick below is exact for
@@ -84,15 +111,10 @@ def apply_host_budget(frontier: DataFrame, budget: int | None,
         w1 = Window.partitionBy(host, salt).orderBy(*order)
         pre = frontier.withColumn("__prerank", F.row_number().over(w1))
         survivors = pre.filter(F.col("__prerank") <= budget).drop("__prerank")
-        losers = pre.filter(F.col("__prerank") > budget).drop("__prerank")
+        losers = (pre.filter(F.col("__prerank") > budget).drop("__prerank")
+                  .withColumn(SELECTED, F.lit(False)))
         w2 = Window.partitionBy(host).orderBy(*order)
-        reranked = survivors.withColumn("__rank", F.row_number().over(w2))
-        selected = reranked.filter(F.col("__rank") <= budget).drop("__rank")
-        deferred = reranked.filter(F.col("__rank") > budget).drop("__rank") \
-            .unionByName(losers)
-        return selected, deferred
+        return survivors.withColumn(
+            SELECTED, F.row_number().over(w2) <= budget).unionByName(losers)
     w = Window.partitionBy(host).orderBy(*order)
-    ranked = frontier.withColumn("__rank", F.row_number().over(w))
-    selected = ranked.filter(F.col("__rank") <= budget).drop("__rank")
-    deferred = ranked.filter(F.col("__rank") > budget).drop("__rank")
-    return selected, deferred
+    return frontier.withColumn(SELECTED, F.row_number().over(w) <= budget)

@@ -481,13 +481,16 @@ def make_fetch(cfg: CrawlConfig, jar_key: str | None = None,
     return fetch
 
 
-def fetch_partitions(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
+def fetch_partitions(frontier: DataFrame, cfg: CrawlConfig,
+                     rows: int | None = None) -> DataFrame:
     """C1 (reference worker pool, args.rs:22-29): ``jobs`` bounds the number
     of simultaneous connections — realized as the fetch stage's partition
     count. jobs=1 (the reference default) serializes requests exactly like
-    the single-worker crawl."""
+    the single-worker crawl. ``rows``, the frontier's row count when the
+    caller knows it, caps the partitions, so a frontier smaller than
+    ``jobs`` starts no empty fetch task."""
     if cfg.jobs and cfg.jobs > 0:
-        return frontier.repartition(cfg.jobs)
+        return frontier.repartition(min(cfg.jobs, rows or cfg.jobs))
     return frontier
 
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 import os
 import tempfile
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import (
@@ -96,7 +97,10 @@ class CrawlResult:
     supersteps: int
     wall_times: list[float] = dc_field(default_factory=list)
     #: per-superstep phase breakdown (fetch+parse+result write / candidate
-    #: dedup / the rest: frontier, sketch, commit), for scaling diagnosis
+    #: dedup / the rest: frontier, sketch, commit), for scaling diagnosis,
+    #: and ``codegen_compiles``: the classes Spark's code generator compiled
+    #: during the superstep (JVM-wide count read on the driver; in local
+    #: mode it covers the executors too)
     phase_times: list[dict] = dc_field(default_factory=list)
     #: parquet spill dir holding the per-superstep result stores (delete only
     #: after consuming result.mirror, crawl_log and metrics)
@@ -172,7 +176,20 @@ def crawl(
     at least one superstep, so every completed superstep remains a valid
     resumable prefix. This is the BSP realization of interrupting the
     reference mid-crawl (tests/benchmark.py SIGINTs the process and the
-    already-written files persist)."""
+    already-written files persist).
+
+    Every superstep runs the same dataflow, so Spark's cache of generated
+    code serves all supersteps after the first — provided the generated
+    source is identical: no per-superstep literal reaches a plan (the
+    superstep number rides the rows), and for the crawl's duration
+    ``spark.sql.codegen.useIdInClassName`` is off, so a stage whose id
+    shifted (the seen union widens every superstep) keeps its class name."""
+    with _sql_conf(spark, "spark.sql.codegen.useIdInClassName", "false"):
+        return _crawl(spark, cfg, pages, resume, stop_event)
+
+
+def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
+           resume: bool, stop_event) -> CrawlResult:
     pages = _normalize_pages(pages)
     # Column-prune the fetch side once: the page pipeline consumes the raw
     # body + fetch metadata; ``text``/``lang``/``warc_ts`` are corpus
@@ -292,6 +309,9 @@ def crawl(
         import uuid
         live_jar_key = f"crawl-{uuid.uuid4().hex}"
 
+    # rows of the frontier its ranking deferred, observed in the job that
+    # ranked it; None for a frontier the previous superstep did not rank
+    frontier_deferred = None
     crawl_t0 = time.monotonic()
     steps_run = 0
     while frontier_count > 0:
@@ -308,12 +328,17 @@ def crawl(
         if stop_event is not None and steps_run > 0 and stop_event.is_set():
             break
         t0 = time.monotonic()
+        compiles0 = _codegen_compiles(spark)
 
         # C3: per-host politeness budget — overflow defers, order preserved;
         # salted two-phase window so a mega-host cannot serialize the stage.
+        # The previous superstep ranked this frontier when it materialized
+        # it, so the split is two filters; a frontier no larger than the
+        # budget defers nothing; any other (a resumed one) is ranked here.
         selected, deferred = frontier_ops.apply_host_budget(
             frontier, cfg.host_budget, salt_buckets=SKEW_SALT_BUCKETS,
-            priority_expr=cfg.priority_expr)
+            priority_expr=cfg.priority_expr, rows=frontier_count)
+        deferred_rows = 0 if deferred is None else frontier_deferred
 
         # S2/S3: the fetch = LEFT OUTER join against the pages corpus,
         # preserving every frontier row (a missing page is a fetch error, not
@@ -453,7 +478,8 @@ def crawl(
                 relay_cookies=live_fetch_ops.render_cookie_headers(
                     live_cookie_store),
                 host_delays=dict(live_robots_delays))
-            store = live_fetch_ops.fetch_partitions(selected, cfg).mapInPandas(
+            store = live_fetch_ops.fetch_partitions(
+                selected, cfg, frontier_count).mapInPandas(
                 lambda batches, fetch=fetch, sink=sink: sink(
                     pipeline(fetch(batches))),
                 STORE_SUMMARY_SCHEMA)
@@ -516,19 +542,22 @@ def crawl(
             if err:
                 raise CrawlAbort(f"Couldn't download a page: {err[0].url}")
 
-        # P4-P8: explode candidates, gate, dedup, grow the seen set.
+        # P4-P8: explode candidates, gate, dedup, grow the seen set. The
+        # superstep number rides the rows from here on, never a literal:
+        # Spark inlines int literals into generated code, and one per
+        # superstep would make every superstep compile its own classes.
         t_cand0 = time.monotonic()
         cand = (
             result_pq.select(
                 F.col("url").alias("parent_url"),
-                F.col("depth"), F.col("ext_depth"),
+                F.col("depth"), F.col("ext_depth"), F.col("superstep"),
                 F.col("order_key").alias("parent_key"),
                 F.explode("links").alias("link"),
             )
             .select(
                 F.col("link.url").alias("url"),
                 F.col("link.external").alias("external"),
-                F.col("depth"), F.col("ext_depth"),
+                F.col("depth"), F.col("ext_depth"), F.col("superstep"),
                 F.concat("parent_key", F.array(F.col("link.pos").cast("long")))
                 .alias("order_key"),
             )
@@ -589,31 +618,45 @@ def crawl(
                 .otherwise(F.col("depth")).alias("depth"),
                 F.when(F.col("external"), F.col("ext_depth") + 1)
                 .otherwise(F.col("ext_depth")).alias("ext_depth"),
-                F.lit(step + 1).alias("superstep"),
+                (F.col("superstep") + 1).alias("superstep"),
                 "order_key",
             )
         )
-        if deferred is not None:
-            next_frontier = next_frontier.unionByName(
-                deferred.withColumn("superstep", F.lit(step + 1)))
 
-        # Commit the superstep. next_frontier is a cheap projection over the
-        # already-checkpointed new_urls, so it only needs its own
-        # materialization when a budget deferral chains it to the previous
-        # frontier's lineage; its row count rides that job. Otherwise it is
-        # the gated count observed on the new_urls checkpoint — zero extra
-        # jobs either way.
         if deferred is not None:
+            next_frontier = next_frontier.unionByName(deferred.withColumn(
+                "superstep", F.col("superstep") + 1))
+
+        # Commit the superstep. next_frontier is a cheap view over the
+        # already-checkpointed new_urls (and the previous frontier's
+        # deferred rows), so it needs its own materialization only when the
+        # next superstep's budget can defer part of it: then that job ranks
+        # it (the one window evaluation per superstep), and its row count
+        # and deferred count ride it. Otherwise its count is the gated
+        # count observed on the new_urls checkpoint plus the deferred rows —
+        # zero extra jobs either way.
+        frontier_count = int(counts["gated"] or 0)
+        if cfg.host_budget is not None and (
+                deferred_rows is None
+                or frontier_count + deferred_rows > cfg.host_budget):
+            next_frontier = frontier_ops.rank_host_budget(
+                next_frontier, cfg.host_budget,
+                salt_buckets=SKEW_SALT_BUCKETS,
+                priority_expr=cfg.priority_expr)
             frontier_obs = Observation(f"frontier_{step}")
             next_frontier = next_frontier.observe(
-                frontier_obs, F.count(F.lit(1)).alias("n"))
+                frontier_obs, F.count(F.lit(1)).alias("n"),
+                F.sum((~F.col(frontier_ops.SELECTED)).cast("long"))
+                .alias("deferred"))
             next_frontier = next_frontier.localCheckpoint(eager=True)
             frontier_count = int(frontier_obs.get["n"] or 0)
+            frontier_deferred = int(frontier_obs.get["deferred"] or 0)
         else:
-            frontier_count = int(counts["gated"] or 0)
+            frontier_count += deferred_rows
+            frontier_deferred = None
         new_count = int(counts["n"] or 0)
         seen_count += new_count
-        seen_delta = new_urls.select("url", F.lit(step).alias("superstep"))
+        seen_delta = new_urls.select("url", "superstep")
         seen_deltas.append(seen_delta)
         pending_seen.append(seen_delta)
         seen = _union_all(spark, seen_deltas, SEEN_SCHEMA)
@@ -658,21 +701,22 @@ def crawl(
 
         wall = time.monotonic() - t0
         wall_times.append(wall)
-        phase_times.append({
-            "superstep": step,
-            "fetch_parse_mirror": round(t_fetch, 3),
-            "cand_dedup": round(t_cand, 3),
-            "rest": round(wall - t_fetch - t_cand, 3),
-        })
         if ckpt is not None:
             ckpt.commit(
                 step,
-                frontier=frontier,
+                frontier=frontier.drop(frontier_ops.SELECTED),
                 seen_delta=_union_all(spark, pending_seen, SEEN_SCHEMA),
                 stats={"frontier_rows": frontier_count, "new_urls": new_count,
                        "wall_sec": wall},
             )
             pending_seen = []
+        phase_times.append({
+            "superstep": step,
+            "fetch_parse_mirror": round(t_fetch, 3),
+            "cand_dedup": round(t_cand, 3),
+            "rest": round(wall - t_fetch - t_cand, 3),
+            "codegen_compiles": _codegen_compiles(spark) - compiles0,
+        })
         step += 1
         steps_run += 1
 
@@ -713,13 +757,25 @@ def _scan_is_bucketed(spark: SparkSession, fetch_pages: DataFrame) -> bool:
     joined = probe.join(
         fetch_pages.select(F.col("url").alias("page_url")),
         on=F.col("fetch_url") == F.col("page_url"), how="left")
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
+    with _sql_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         return "Bucketed: true" in _plan_string(joined)
+
+
+@contextmanager
+def _sql_conf(spark: SparkSession, key: str, value: str):
+    """Set a runtime SQL conf for the block; restore the caller's value."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
     finally:
         spark.conf.set(key, old)
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _plan_string(df: DataFrame, mode: str = "formatted") -> str:

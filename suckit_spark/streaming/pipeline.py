@@ -99,7 +99,9 @@ def corpus_stream(pages: DataFrame) -> DataFrame:
     land — the continuous feed into the curation operators. Same
     charset-detect + span-scanner text contract as the batch bridge and the
     crawl itself (byte-identical per url, BASELINE.json input_hint); one
-    stateless Arrow stage, so batch tests cover the stream's kernel too."""
+    stateless Arrow stage, so batch tests cover the stream's kernel too.
+    Only HTML pages (by Content-Type, missing means HTML, as the crawl reads
+    it) become documents, as in the batch bridge and WARC ingest."""
     import pandas as pd
 
     from ..functions import htmlkit
@@ -112,7 +114,9 @@ def corpus_stream(pages: DataFrame) -> DataFrame:
                 {"url": r.url, "warc_ts": r.warc_ts,
                  "text": htmlkit.extract_text(htmlkit.decode_page(
                      bytes(r.html), r.content_type)[1])}
-                for r in pdf.itertuples() if r.html is not None]
+                for r in pdf.itertuples() if r.html is not None
+                and htmlkit.is_html_type(
+                    htmlkit.header_data_type(r.content_type))]
             yield pd.DataFrame(out, columns=cols)
 
     return _documents(pages.mapInPandas(

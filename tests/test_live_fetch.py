@@ -226,6 +226,24 @@ def test_live_jobs_partitioning(spark, site_server):
     assert out.count() == 2
 
 
+def test_live_fetch_starts_no_empty_tasks(spark, site_server):
+    """A frontier smaller than ``jobs`` fetches in one task per row at
+    most: a 1-row frontier with jobs=4 runs one fetch partition, not three
+    empty ones beside it (the crawl passes the frontier's known count)."""
+    base = site_server
+    from suckit_spark.operators import live_fetch as lf
+    frontier = spark.createDataFrame(
+        [(f"{base}/index.html", f"{base}/index.html", 0, 0, 0, [0])],
+        "url string, fetch_url string, depth int, ext_depth int, "
+        "superstep int, order_key array<long>")
+    cfg = CrawlConfig(origin=f"{base}/index.html", jobs=4)
+    one = lf.fetch_partitions(frontier, cfg, rows=1)
+    assert one.rdd.getNumPartitions() == 1
+    assert lf.fetch_partitions(frontier, cfg).rdd.getNumPartitions() == 4
+    fetched = one.mapInPandas(lf.make_fetch(cfg), lf.FETCHED_SCHEMA)
+    assert [(r.status, r.found) for r in fetched.collect()] == [(200, True)]
+
+
 def test_live_write_plan_runs_one_python_stage(spark, site_server,
                                                monkeypatch):
     """A live superstep fetches, parses and writes its result store in ONE

@@ -96,6 +96,17 @@ def test_host_metrics_stream_counts(spark, landing, cfg):
     assert all(r.errors == 0 for r in got)
 
 
+def test_corpus_stream_keeps_html_pages_only(spark, landing):
+    """Only HTML pages become documents, as in the batch bridge and WARC
+    ingest: site_a's JPEG, MP3 and text file do not."""
+    stream = sp.corpus_stream(sp.read_page_stream(spark, landing))
+    got = {r.url for r in run_to_memory(spark, stream, "corpus_html").collect()}
+    types = {r["url"]: r["content_type"] for r in fixtures.site_a()}
+    assert "http://0.0.0.0/jpeg.jpg" in types
+    assert got == {u for u, t in types.items()
+                   if t is None or t.startswith("text/html")}
+
+
 def test_politeness_stream_budget_and_sequence(spark, landing, cfg):
     cands = sp.candidates_stream(sp.extract_stream(
         cfg, sp.read_page_stream(spark, landing)))
@@ -144,7 +155,8 @@ def test_corpus_stream_matches_batch_extraction(spark, landing, cfg):
     want = {
         r["url"]: htmlkit.extract_text(
             r["html"].decode("utf-8", errors="replace"))
-        for r in fixtures.site_a() if r["html"] is not None}
+        for r in fixtures.site_a() if r["html"] is not None
+        and htmlkit.is_html_type(htmlkit.header_data_type(r["content_type"]))}
     assert set(got) == set(want)
     for url, text in want.items():
         assert got[url].text == text, url
