@@ -12,9 +12,9 @@ Parquet. Superstep ``s`` lives under ``<dir>/step=<s>/``:
   and the metrics table are lazy views over it, so nothing else stores them.
 * ``frontier/`` and ``seen/`` — the next superstep's frontier and this
   superstep's newly-seen URLs, the two tables the commit writes in ONE
-  stage: one Spark job, one Python task per million rows. Every store is
-  written task by task from the Python workers (``parquet_sink``), one
-  ``part-<partition>-c000.parquet`` per task.
+  Spark job of one stage. Every store is written task by task from the
+  Python workers (``parquet_sink``), one ``part-<partition>-c000.parquet``
+  per task.
 * ``_manifest_<s>.json`` at the top level, published last by an atomic
   rename: the superstep's stats and the frontier's per-partition row counts,
   read from the written files' parquet footers (Iceberg manifests carry the
@@ -38,10 +38,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from .parquet_sink import parquet_stage
-
-#: a commit writes frontier and seen in one stage of one task per this many
-#: rows (``stats`` holds both counts before the write)
-ROWS_PER_COMMIT_TASK = 1_000_000
 
 
 class CrawlCheckpoint:
@@ -72,18 +68,30 @@ class CrawlCheckpoint:
         is stored append-only, the Iceberg shape, so a commit is O(delta),
         never O(total)), then the manifest. The superstep's result store is
         already on disk (the crawl loop wrote it); publishing the manifest
-        is what makes it part of the committed snapshot."""
-        frontier_path = self._step_path(step, "frontier")
-        rows = stats["frontier_rows"] + stats["new_urls"]
-        parquet_stage(
-            {frontier_path: frontier, self._step_path(step, "seen"): seen_delta},
-            partitions=rows // ROWS_PER_COMMIT_TASK + 1,
+        is what makes it part of the committed snapshot.
+
+        Both tables are written by one Spark job of one stage, each table
+        from one task per Arrow batch of its rows (``stats`` holds both row
+        counts; a batch is the unit ``mapInArrow`` hands a Python worker)
+        and never from more tasks than it has partitions, which is what a
+        separate write ran: a small table is one task, a large one keeps a
+        task per partition."""
+        batch = int(self.spark.conf.get(
+            "spark.sql.execution.arrow.maxRecordsPerBatch"))
+
+        def stage(df, name, rows):
+            tasks = -(-rows // batch) if batch > 0 else rows  # <= 0: no limit
+            return parquet_stage(df, self._step_path(step, name), max(1, tasks))
+
+        stage(frontier, "frontier", stats["frontier_rows"]).union(
+            stage(seen_delta, "seen", stats["new_urls"]),
         ).write.format("noop").mode("overwrite").save()
         manifest = {
             "superstep": step,
             "committed_at": time.time(),
             "stats": stats,
-            "frontier_partition_lineage": _partition_rows(frontier_path),
+            "frontier_partition_lineage": _partition_rows(
+                self._step_path(step, "frontier")),
         }
         tmp = self._manifest_path(step) + ".tmp"
         with open(tmp, "w") as f:

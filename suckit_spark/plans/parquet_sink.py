@@ -14,10 +14,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from contextlib import ExitStack
-from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 
 def reset_dir(path: str) -> None:
@@ -71,36 +69,20 @@ class PartitionFile:
                 os.remove(self.tmp)
 
 
-def parquet_stage(tables: dict[str, DataFrame],
-                  partitions: int | None = None) -> DataFrame:
-    """The lazy stage that writes each ``tables[path]`` under its ``path``
-    (emptied now). All tables share the one stage: each row travels as a
-    struct in its table's own column (null in the others), and a task writes
-    at most one part file per table. ``partitions`` coalesces the inputs to
-    that many tasks, with no shuffle; None keeps their partitions. The stage
-    returns no rows, so the caller runs it with a ``noop`` write."""
-    paths, frames = list(tables), list(tables.values())
-    for path in paths:
-        reset_dir(path)
-    nulls = [F.lit(None).cast(df.schema).alias(f"t{i}")
-             for i, df in enumerate(frames)]
-    routed = reduce(DataFrame.union, [
-        df.select(*nulls[:i], F.struct(*df.columns).alias(f"t{i}"),
-                  *nulls[i + 1:])
-        for i, df in enumerate(frames)])
-    if partitions is not None:
-        routed = routed.coalesce(partitions)
+def parquet_stage(df: DataFrame, path: str, partitions: int) -> DataFrame:
+    """The lazy stage that writes ``df`` under ``path`` (emptied now) from
+    at most ``partitions`` tasks: its partitions are coalesced, with no
+    shuffle, never split. The stage returns no rows, so the caller runs it
+    with a ``noop`` write, alone or unioned with other such stages (then one
+    Spark stage writes them all, each table from its own tasks)."""
+    reset_dir(path)
 
     def sink(batches):
         import pyarrow as pa
 
-        with ExitStack() as stack:
-            outs = [stack.enter_context(PartitionFile(p)) for p in paths]
+        with PartitionFile(path) as out:
             for batch in batches:
-                for col, out in zip(batch.columns, outs):
-                    mine = col.filter(col.is_valid())
-                    if len(mine):
-                        out.write(pa.Table.from_struct_array(mine))
+                out.write(pa.Table.from_batches([batch]))
         return iter(())
 
-    return routed.mapInArrow(sink, "written long")
+    return df.coalesce(partitions).mapInArrow(sink, "written long")

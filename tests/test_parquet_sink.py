@@ -96,10 +96,46 @@ def test_parquet_stage_round_trips_and_overwrites(spark, tmp_path):
                   F.col("id").cast("int").alias("depth"),
                   F.array(F.col("id"), F.lit(1).cast("long"))
                   .alias("order_key")))
-    parquet_sink.parquet_stage({path: df}).write.format("noop").mode(
+    parquet_sink.parquet_stage(df, path, 3).write.format("noop").mode(
         "overwrite").save()
     names = sorted(os.path.basename(f) for f in glob.glob(f"{path}/*"))
     assert names == [f"part-{p:05d}-c000.parquet" for p in range(3)]
     back = spark.read.schema(df.schema).parquet(path)
     assert sorted(back.collect()) == sorted(df.collect())
     assert sum(r["count"] for r in _partition_rows(path)) == 50
+
+
+def test_commit_writes_one_task_per_arrow_batch(spark, tmp_path):
+    """A commit writes frontier and seen in one stage, each table from one
+    task per Arrow batch of its rows and never from more tasks than it has
+    partitions: a small table is one task, a large one keeps one task per
+    partition."""
+    from pyspark.sql import functions as F
+
+    from suckit_spark.plans.checkpoint import CrawlCheckpoint
+
+    frontier = spark.range(0, 40, numPartitions=4).select(
+        F.format_string("http://h/%d", "id").alias("url"),
+        F.lit(1).alias("superstep"))
+    seen = spark.range(0, 20, numPartitions=2).select(
+        F.format_string("http://s/%d", "id").alias("url"),
+        F.lit(0).alias("superstep"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    ck = CrawlCheckpoint(spark, str(tmp_path))
+    parts = {}
+    try:
+        for step, batch in enumerate((10_000, 15, 1)):
+            spark.conf.set(key, str(batch))
+            ck.commit(step, frontier, seen,
+                      {"frontier_rows": 40, "new_urls": 20})
+            parts[batch] = [
+                len(glob.glob(f"{tmp_path}/step={step:06d}/{t}/part-*"))
+                for t in ("frontier", "seen")]
+            for t, df in (("frontier", frontier), ("seen", seen)):
+                back = spark.read.parquet(f"{tmp_path}/step={step:06d}/{t}")
+                assert sorted(back.collect()) == sorted(df.collect())
+    finally:
+        spark.conf.unset(key)
+    assert parts == {10_000: [1, 1], 15: [3, 2], 1: [4, 2]}
+    assert ck.manifests()[2]["frontier_partition_lineage"] == [
+        {"partition": p, "count": 10} for p in range(4)]

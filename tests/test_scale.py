@@ -347,10 +347,13 @@ def test_checkpoint_fault_injection_resume(spark, tmp_path, monkeypatch):
     """A crawl killed inside a commit resumes exactly. First kill: the
     manifest rename of superstep 2 raises, after its result, frontier and
     seen dirs were written. Second kill: superstep 2's commit write stage
-    (frontier and seen in one stage) raises. Third: a checkpoint in the
-    older layout, whose step dirs also hold crawl_log/ and metrics/. Each
-    resumed crawl's visit order, seen set, mirror rows and metrics equal an
-    uninterrupted crawl's."""
+    (frontier and seen in one stage) raises in the frontier's task after
+    that task published its part file. Third: a checkpoint in the older
+    layout, whose step dirs also hold crawl_log/ and metrics/. Each killed
+    crawl leaves step 2's result and frontier part files visible but
+    uncommitted, and each resumed crawl's visit order, seen set, mirror
+    rows and metrics equal an uninterrupted crawl's."""
+    import glob
     import os
 
     from pyspark.sql import functions as F
@@ -367,31 +370,37 @@ def test_checkpoint_fault_injection_resume(spark, tmp_path, monkeypatch):
     want = _crawl_state(full)
     full.close()
 
-    class Killed(RuntimeError):
-        pass
-
     replace = os.replace
     parquet_stage = ckpt_mod.parquet_stage
+    step2 = "step=000002"
 
     def manifest_rename_dies(src, dst):
         if dst.endswith("_manifest_000002.json"):
-            raise Killed(dst)
+            raise RuntimeError("killed inside the commit")
         return replace(src, dst)
 
-    def commit_write_dies(tables, partitions=None):
-        seen = os.path.join("step=000002", "seen")
-        if any(path.endswith(seen) for path in tables):
-            raise Killed(seen)
-        return parquet_stage(tables, partitions)
+    def commit_write_dies(df, path, partitions):
+        stage = parquet_stage(df, path, partitions)
+        if not path.endswith(os.path.join(step2, "frontier")):
+            return stage
+
+        def dies(batches):
+            # runs in the frontier's write task once its sink returned,
+            # i.e. once that task's part file is published
+            for _ in batches:
+                pass
+            raise RuntimeError("killed inside the commit")
+        return stage.mapInArrow(dies, "written long")
 
     for owner, name, fault in ((ckpt_mod.os, "replace", manifest_rename_dies),
                                (ckpt_mod, "parquet_stage", commit_write_dies)):
         ck = str(tmp_path / name)
         with monkeypatch.context() as m:
             m.setattr(owner, name, fault)
-            with pytest.raises(Killed):
+            with pytest.raises(Exception, match="killed inside the commit"):
                 crawl(spark, cfg.with_(checkpoint_dir=ck), pages)
-        assert os.path.isdir(os.path.join(ck, "step=000002", "result"))
+        for store in ("result", "frontier"):
+            assert glob.glob(os.path.join(ck, step2, store, "part-*")), store
         assert CrawlCheckpoint(spark, ck).last_superstep() == 1
         resumed = crawl(spark, cfg.with_(checkpoint_dir=ck), pages,
                         resume=True)
