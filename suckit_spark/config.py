@@ -2,7 +2,7 @@
 
 Mirrors all 19 typed fields of the reference's ``Args`` (reference:
 /root/reference/src/args.rs:8-162) plus the scale knobs the PySpark engine adds
-(per-host politeness budgets, approximate seen-set sketch, checkpointing,
+(per-host politeness budgets, approximate bloom seen-set, checkpointing,
 robots).
 
 The config is a frozen value object: regex filters are compiled once on the
@@ -84,21 +84,18 @@ class CrawlConfig:
     #: reference-parity contract; no sketch is built, probed or maintained
     #: (a sketch prefilter in front of the join was measured a loss: the
     #: join exchanges the whole seen side anyway, BENCH/BLOOM.md).
-    #: "bloom" or "cuckoo" = APPROXIMATE (the 10^10-scale path): once seen
-    #: reaches bloom_threshold, that sketch ALONE decides membership —
+    #: "bloom" = APPROXIMATE (the 10^10-scale path): once seen reaches
+    #: bloom_threshold, a range-partitioned, executor-built,
+    #: broadcast-probed bloom filter ALONE decides membership —
     #: O(candidates) dedup with no shuffle of the seen side; a false
-    #: positive drops a candidate (coverage loss bounded by the sketch's
-    #: fpp), never visits one twice. "bloom" has the smallest memory;
-    #: "cuckoo" supports DELETION (un-see urls for re-crawl or
-    #: sliding-window workflows). Both are range-partitioned,
-    #: executor-built, broadcast-probed.
+    #: positive drops a candidate (coverage loss bounded by bloom_fpp),
+    #: never visits one twice.
     seen_sketch: str | None = None
-    #: approximate mode only: seen count at which the sketch engages (built
+    #: approximate mode only: seen count at which the bloom engages (built
     #: at the end of the superstep that reaches it; supersteps before that
     #: dedup exactly). None = never engage.
     bloom_threshold: int | None = 10_000
-    #: approximate mode only: the bloom sketch's target false-positive rate
-    #: (the cuckoo's is fixed by its 16-bit fingerprints).
+    #: approximate mode only: the bloom's target false-positive rate.
     bloom_fpp: float = 0.03
     #: frontier priority (north_rule "priority queue"): SQL expression over
     #: frontier columns (url, fetch_url, depth, ext_depth, superstep,
@@ -137,8 +134,8 @@ class CrawlConfig:
                     self.include_download, self.exclude_download):
             re.compile(pat)
         build_auth_map(list(self.auth), self.origin)
-        if self.seen_sketch not in (None, "bloom", "cuckoo"):
-            raise ValueError(f"seen_sketch must be None, 'bloom' or 'cuckoo', "
+        if self.seen_sketch not in (None, "bloom"):
+            raise ValueError(f"seen_sketch must be None or 'bloom', "
                              f"not {self.seen_sketch!r}")
 
     # Compiled-once accessors (kept as methods so the dataclass stays picklable

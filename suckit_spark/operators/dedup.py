@@ -1,4 +1,4 @@
-"""Distributed URL-seen membership: exact left-anti join, or a sketch alone.
+"""Distributed URL-seen membership: exact left-anti join, or a bloom alone.
 
 The reference keeps an exact in-memory ``HashMap`` behind a mutex
 (scraper.rs:44,76-85). Here the default (exact) mode is the reference-parity
@@ -9,24 +9,23 @@ must exchange the whole seen side anyway, so the probe, split and union are
 pure extra work (``BENCH/BLOOM.md``, 20 M seen: 8.42 s prefiltered against
 3.78 s for the plain join).
 
-A seen-set sketch backs only the APPROXIMATE mode (``CrawlConfig.
-seen_sketch``): once engaged, :func:`probe_unseen` lets the sketch alone
-decide membership — O(candidates) with no shuffle of the seen side, at the
-price of dropping false-positive candidates. Two sketches share one
-maintenance base (:class:`SeenSketch`): :class:`BloomState` here (smallest
-memory) and ``cuckoo.CuckooState`` (supports deletion).
+A bloom filter (:class:`BloomState`) backs only the APPROXIMATE mode
+(``CrawlConfig.seen_sketch="bloom"``): once engaged, :func:`probe_unseen`
+lets the bloom alone decide membership — O(candidates) with no shuffle of the
+seen side, at the price of dropping false-positive candidates.
 
-Both are RANGE-PARTITIONED and built ON EXECUTORS: urls hash into
+The bloom is RANGE-PARTITIONED and built ON EXECUTORS: urls hash into
 ``num_ranges`` ranges, each range owning an independent filter, so every
-filter stays broadcastable at the 10^10 design point. For the bloom, bit
-positions are computed with Spark built-ins (``xxhash64`` + ``pmod``,
-whole-stage codegen'd), OR-combined into 64-bit words by a hash aggregation
-WITH map-side partial combine (so the shuffle carries at most the distinct
-set words per range, bounded by m/64), then packed to bytes in one Arrow
-stage per range. The driver only ever receives the finished filter blobs —
-exactly the bytes it must broadcast anyway. The membership probe is a
-vectorized pandas UDF over the precomputed position columns plus the range
-id.
+filter stays broadcastable at the 10^10 design point. Bit positions are
+computed with Spark built-ins (``xxhash64`` + ``pmod``, whole-stage
+codegen'd) and OR-combined into 64-bit words by a hash aggregation WITH
+map-side partial combine, so the shuffle and any driver collect carry at
+most the distinct set words per range (bounded by m/64). The bulk build
+packs those words to bytes in one Arrow stage per range, so the driver only
+receives the finished filter blobs — exactly the bytes it must broadcast
+anyway; a seen delta's words are ORed into the driver-held blobs. The
+membership probe is a vectorized pandas UDF over the precomputed position
+columns plus the range id.
 """
 
 from __future__ import annotations
@@ -42,9 +41,6 @@ from pyspark.sql.types import BooleanType
 #: filter keeps each blob comfortably under Spark's broadcast limits;
 #: ``num_ranges`` scales up automatically past this.
 MAX_BITS_PER_RANGE = 1 << 30
-#: ``BloomState`` delta inserts up to this many bit positions collect the
-#: raw positions; larger deltas collect OR-aggregated words instead.
-MAX_DELTA_POSITIONS = 4_000_000
 
 
 def bloom_params(n_items: int, fpp: float) -> tuple[int, int]:
@@ -69,21 +65,15 @@ def _position_cols(col: Column, m: int, k: int) -> list[Column]:
     return [F.pmod(F.xxhash64(col, F.lit(i)), F.lit(m)) for i in range(k)]
 
 
-def _positions(df: DataFrame, url_col: str, m: int, k: int,
-               num_ranges: int) -> DataFrame:
-    """(rg, p): one row per bit position a url sets (JVM exprs only)."""
-    col = F.col(url_col)
-    return df.select(
-        _range_col(col, num_ranges).alias("rg"),
-        F.explode(F.array(*_position_cols(col, m, k))).alias("p"),
-    )
-
-
 def _set_words(df: DataFrame, url_col: str, m: int, k: int,
                num_ranges: int) -> DataFrame:
     """(rg, w, word): the 64-bit words a set of urls sets, OR-aggregated
     with map-side combine — at most m/64 rows per range."""
-    return _positions(df, url_col, m, k, num_ranges).groupBy(
+    col = F.col(url_col)
+    return df.select(
+        _range_col(col, num_ranges).alias("rg"),
+        F.explode(F.array(*_position_cols(col, m, k))).alias("p"),
+    ).groupBy(
         "rg", (F.col("p") / 64).cast("long").alias("w")
     ).agg(F.expr(
         "bit_or(shiftleft(CAST(1 AS BIGINT), CAST(pmod(p, 64) AS INT)))"
@@ -91,8 +81,8 @@ def _set_words(df: DataFrame, url_col: str, m: int, k: int,
 
 
 def _blob_bytes(m: int) -> int:
-    """Blob length for an m-bit filter, padded to whole 64-bit words so the
-    sparse delta path can OR words in place via a uint64 view."""
+    """Blob length for an m-bit filter, padded to whole 64-bit words so a
+    delta's words can be ORed in place via a uint64 view."""
     return ((m + 63) // 64) * 8
 
 
@@ -116,31 +106,34 @@ def _build_blobs(df: DataFrame, url_col: str, m: int, k: int,
             for r in parts}
 
 
-class SeenSketch:
-    """Incrementally-maintained, range-partitioned seen-set sketch: the
-    maintenance shared by :class:`BloomState` and ``cuckoo.CuckooState``.
+class BloomState:
+    """Incrementally-maintained, range-partitioned bloom filter over the
+    seen set: never a false negative, false positives at ``fpp``.
 
-    The seen table is append-only, so a sketch never needs rebuilding from
-    the full table: size the geometry once for ``capacity`` items, build it
-    in bulk on the first :meth:`add`, then fold each superstep's (small)
-    seen delta in — per-superstep cost is proportional to the DELTA, not the
-    accumulated seen set. When the item count outgrows capacity, rebuild
-    from the full table at ``max(count, capacity * GROWTH)`` — geometric
-    growth keeps total rebuild work O(final build).
-
-    Subclasses supply the geometry (:meth:`_resize`), the bulk build
-    (:meth:`_build`), the delta insert (:meth:`_insert`), an empty range
-    blob (:meth:`_empty_blob`) and the probe (``might_contain_col``).
+    The seen table is append-only, so the filter never needs rebuilding
+    from the full table: size the geometry once for ``capacity`` items,
+    build it in bulk on the first :meth:`add`, then fold each superstep's
+    (small) seen delta in — per-superstep cost is proportional to the
+    DELTA, not the accumulated seen set. When the item count outgrows
+    capacity, rebuild from the full table at ``max(count, capacity *
+    GROWTH)`` — geometric growth keeps total rebuild work O(final build).
     """
 
     GROWTH = 8
 
-    def __init__(self, url_col: str, capacity: int):
+    def __init__(self, url_col: str, capacity: int, fpp: float):
         self.url_col = url_col
+        self.fpp = fpp
         self.count = 0
         self.blobs: dict = {}   # range id -> numpy filter; absent = empty
         self._bc = None         # cached broadcast of the current version
         self._resize(max(capacity, 1))
+
+    def _resize(self, capacity: int) -> None:
+        self.capacity = capacity
+        self.num_ranges = num_ranges_for(capacity, self.fpp)
+        self.m, self.k = bloom_params(
+            -(-capacity // self.num_ranges), self.fpp)
 
     def add(self, delta: DataFrame, delta_count: int,
             full_seen: DataFrame | None = None) -> None:
@@ -150,12 +143,12 @@ class SeenSketch:
         grow = self.count + delta_count > self.capacity
         if grow and full_seen is None and self.count:
             # Raise BEFORE mutating any state — the caller can retry with
-            # full_seen and the sketch is still exactly what it was.
+            # full_seen and the filter is still exactly what it was.
             # Rebuilding the grown geometry from the delta alone would drop
             # every previously-added url (false negatives: the crawl would
             # re-visit them).
             raise ValueError(
-                f"{type(self).__name__} growth triggered (count "
+                f"BloomState growth triggered (count "
                 f"{self.count + delta_count} > capacity {self.capacity}) "
                 "but no full_seen DataFrame was passed; rebuilding from the "
                 "delta would drop every previously-added url")
@@ -164,10 +157,20 @@ class SeenSketch:
         if grow:
             self._resize(max(self.count, self.capacity * self.GROWTH))
         if grow or not self.blobs:
-            self.blobs = self._build(
-                full_seen if full_seen is not None else delta)
-        else:
-            self._insert(delta, delta_count)
+            self.blobs = _build_blobs(
+                full_seen if full_seen is not None else delta,
+                self.url_col, self.m, self.k, self.num_ranges)
+            return
+        # Collect only the delta's set words and OR them into the
+        # driver-held blobs through a uint64 view — never the full O(m)
+        # blob per superstep.
+        words = _set_words(delta, self.url_col, self.m, self.k,
+                           self.num_ranges).toPandas()
+        for rg, grp in words.groupby("rg"):
+            np.bitwise_or.at(
+                self._writable(int(rg)).view(np.uint64),
+                grp["w"].to_numpy().astype(np.int64),
+                grp["word"].to_numpy().astype(np.int64).view(np.uint64))
 
     def broadcast(self, spark):
         """Broadcast of the current blobs, cached until the next change."""
@@ -185,57 +188,13 @@ class SeenSketch:
         the read-only arrays a bulk build hands back)."""
         blob = self.blobs.get(rg)
         if blob is None:
-            blob = self._empty_blob()
+            blob = np.zeros(_blob_bytes(self.m), dtype=np.uint8)
         elif blob.flags.writeable:
             return blob
         else:
             blob = blob.copy()
         self.blobs[rg] = blob
         return blob
-
-
-class BloomState(SeenSketch):
-    """Range-partitioned bloom filter: the smallest-memory sketch; never a
-    false negative, false positives at ``fpp``."""
-
-    def __init__(self, url_col: str, capacity: int, fpp: float):
-        self.fpp = fpp
-        super().__init__(url_col, capacity)
-
-    def _resize(self, capacity: int) -> None:
-        self.capacity = capacity
-        self.num_ranges = num_ranges_for(capacity, self.fpp)
-        self.m, self.k = bloom_params(
-            -(-capacity // self.num_ranges), self.fpp)
-
-    def _empty_blob(self) -> np.ndarray:
-        return np.zeros(_blob_bytes(self.m), dtype=np.uint8)
-
-    def _build(self, df: DataFrame) -> dict:
-        return _build_blobs(df, self.url_col, self.m, self.k, self.num_ranges)
-
-    def _insert(self, delta: DataFrame, delta_count: int) -> None:
-        """Collect only the delta's bits (sparse, O(delta·k)) and OR them
-        into the driver-held blobs through a uint64 view — never the full
-        O(m) blob per superstep."""
-        if delta_count * self.k <= MAX_DELTA_POSITIONS:
-            # Small delta: one narrow job (no shuffle) collecting the raw
-            # positions via Arrow beats a groupBy over ~all-distinct words.
-            pdf = _positions(delta, self.url_col, self.m, self.k,
-                             self.num_ranges).toPandas()
-            for rg, grp in pdf.groupby("rg"):
-                p = grp["p"].to_numpy().astype(np.int64)
-                np.bitwise_or.at(
-                    self._writable(int(rg)).view(np.uint64), p // 64,
-                    np.uint64(1) << (p % 64).astype(np.uint64))
-            return
-        pdf = _set_words(delta, self.url_col, self.m, self.k,
-                         self.num_ranges).toPandas()
-        for rg, grp in pdf.groupby("rg"):
-            np.bitwise_or.at(
-                self._writable(int(rg)).view(np.uint64),
-                grp["w"].to_numpy().astype(np.int64),
-                grp["word"].to_numpy().astype(np.int64).view(np.uint64))
 
     def might_contain_col(self, spark, col: Column) -> Column:
         """Vectorized membership probe column over this filter version."""
@@ -264,15 +223,14 @@ class BloomState(SeenSketch):
                              *_position_cols(col, self.m, self.k))
 
 
-def probe_unseen(candidates: DataFrame, sketch: SeenSketch,
+def probe_unseen(candidates: DataFrame, sketch: BloomState,
                  url_col: str = "url") -> DataFrame:
-    """APPROXIMATE seen-test: candidates the sketch proves unseen — NO exact
-    residual join. This is the 10^10-scale mode (north_rule bloom/cuckoo
-    seen-set): per-superstep cost is O(candidates) probe work with zero
-    shuffle of the seen side, at the price of dropping false-positive
-    candidates (bounded by the sketch's fpp — a coverage loss, never a
-    duplicate visit). The exact left-anti join stays the default
-    correctness contract."""
+    """APPROXIMATE seen-test: candidates the bloom proves unseen — NO exact
+    residual join. This is the 10^10-scale mode (north_rule bloom seen-set):
+    per-superstep cost is O(candidates) probe work with zero shuffle of the
+    seen side, at the price of dropping false-positive candidates (bounded
+    by the bloom's fpp — a coverage loss, never a duplicate visit). The
+    exact left-anti join stays the default correctness contract."""
     spark = candidates.sparkSession
     return candidates.filter(~sketch.might_contain_col(spark, F.col(url_col)))
 

@@ -18,23 +18,10 @@ pure-Python oracle over the original fixture bytes.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators.frontier import host_col
 from .plans.crawl import CrawlResult
-
-
-def page_store(spark: SparkSession, result: CrawlResult) -> DataFrame:
-    """The full per-superstep result store (all supersteps, all columns
-    except ``page_text``) — the widest view of a finished crawl."""
-    from .plans.crawl import _result_store_schema
-
-    if not result.spill_dir:
-        raise ValueError("CrawlResult has no spill/checkpoint directory")
-    return spark.read.schema(_result_store_schema()).parquet(
-        os.path.join(result.spill_dir, "step=*", "result"))
 
 
 #: stopwords for the corpus lang column — same set the webtext heuristic uses
@@ -71,7 +58,7 @@ def corpus_from_crawl(spark: SparkSession, result: CrawlResult) -> DataFrame:
     extraction is one stateless Arrow stage over the column-pruned store
     scan — partition-parallel, nothing collected."""
     pages = (
-        page_store(spark, result)
+        result.store
         .filter((F.col("status") == "ok") & (F.col("kind") == "html")
                 & F.col("content").isNotNull())
         .select("url", "content", "charset"))

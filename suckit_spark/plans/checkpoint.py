@@ -101,27 +101,25 @@ class CrawlCheckpoint:
     # -- resume -------------------------------------------------------------
     def load(self, schemas: dict) -> dict:
         """The last committed superstep: its number, manifest ``stats``, its
-        ``frontier``, and the ``seen`` and ``result`` stores of every
-        committed superstep, each read with the given ``schemas[name]``
-        (``None`` when no step has that store)."""
+        ``frontier``, and the ``seen`` store of every committed superstep,
+        each read with the given ``schemas[name]``. The result stores are
+        the crawl's to read: it reads those of the steps it resumes together
+        with the ones it runs."""
         step = self.last_superstep()
         if step is None:
             raise FileNotFoundError(f"no committed superstep under {self.dir}")
         with open(self._manifest_path(step)) as f:
             stats = json.load(f)["stats"]
         read = self.spark.read
-        out = {
+        seen = [self._step_path(s, "seen") for s in range(step + 1)]
+        return {
             "superstep": step,
             "stats": stats,
             "frontier": read.schema(schemas["frontier"]).parquet(
                 self._step_path(step, "frontier")),
+            "seen": read.schema(schemas["seen"]).parquet(
+                *[p for p in seen if os.path.exists(p)]),
         }
-        for name in ("seen", "result"):
-            paths = [self._step_path(s, name) for s in range(step + 1)]
-            paths = [p for p in paths if os.path.exists(p)]
-            out[name] = (read.schema(schemas[name]).parquet(*paths)
-                         if paths else None)
-        return out
 
     def manifests(self) -> list[dict]:
         out = []

@@ -32,11 +32,13 @@ Bookkeeping costs no Spark job of its own: the error count and the cookie
 relay's Set-Cookie rows ride the result write as an Observation; the
 new/gated counts and the next wave's robots hosts ride the ``new_urls``
 checkpoint; the frontier count rides the ``next_frontier`` checkpoint. The
-mirror, crawl log and metrics are lazy views over the result stores.
+mirror, crawl log and metrics are lazy views over one read of the result
+stores the crawl ran or resumed.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import time
@@ -94,6 +96,10 @@ class CrawlResult:
     crawl_log: DataFrame          # ordered, with visit_seq
     seen: DataFrame
     metrics: DataFrame
+    #: the result stores of every superstep this crawl ran or resumed, all
+    #: columns but ``page_text``, in one parquet read: the widest view of a
+    #: finished crawl, which the three views above project from
+    store: DataFrame
     supersteps: int
     wall_times: list[float] = dc_field(default_factory=list)
     #: per-superstep phase breakdown (fetch+parse+result write / candidate
@@ -103,17 +109,17 @@ class CrawlResult:
     #: mode it covers the executors too)
     phase_times: list[dict] = dc_field(default_factory=list)
     #: parquet spill dir holding the per-superstep result stores (delete only
-    #: after consuming result.mirror, crawl_log and metrics)
+    #: after consuming result.store, mirror, crawl_log and metrics)
     spill_dir: str | None = None
     #: True when spill_dir is a crawl-created temp dir (safe to delete);
     #: False when it is the caller's checkpoint_dir.
     owns_spill_dir: bool = False
 
     def close(self) -> None:
-        """Delete the temp spill dir backing ``mirror``, ``crawl_log`` and
-        ``metrics``. Call once those DataFrames are fully consumed; they are
-        invalid afterwards. No-op when the spill dir is the caller's
-        checkpoint_dir."""
+        """Delete the temp spill dir backing ``store``, ``mirror``,
+        ``crawl_log`` and ``metrics``. Call once those DataFrames are fully
+        consumed; they are invalid afterwards. No-op when the spill dir is
+        the caller's checkpoint_dir."""
         import shutil
 
         if self.owns_spill_dir and self.spill_dir:
@@ -232,39 +238,38 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
     # one already materialized): the anti-join reads their lazy union, so a
     # superstep never pays to re-copy the whole accumulated seen table —
     # O(total) work per superstep becomes O(delta). (Iceberg snapshots are
-    # exactly this append-only shape; SURVEY.md §4.) result_deltas holds
-    # every superstep's result store, read back from parquet: the mirror,
-    # crawl log and metrics are lazy views over their union.
+    # exactly this append-only shape; SURVEY.md §4.) result_paths lists the
+    # result store of every superstep this crawl ran or resumed: the mirror,
+    # crawl log and metrics are lazy views over one read of them.
     if resume and ckpt is not None and ckpt.last_superstep() is not None:
-        state = ckpt.load({"frontier": FRONTIER_SCHEMA, "seen": SEEN_SCHEMA,
-                           "result": _result_store_schema()})
+        state = ckpt.load({"frontier": FRONTIER_SCHEMA, "seen": SEEN_SCHEMA})
         frontier = state["frontier"]
         frontier_count = int(state["stats"]["frontier_rows"])
         seen_deltas = [state["seen"]]
         seen_count = state["seen"].count()
         step = state["superstep"] + 1
-        result_deltas = ([state["result"]]
-                         if state["result"] is not None else [])
+        result_paths = [p for p in (_result_path(spill_dir, s)
+                                    for s in range(step))
+                        if os.path.exists(p)]
     else:
         frontier = _seed_frontier(spark, cfg)
         frontier_count = 1
         seen_deltas = [local_frame(spark, [(cfg.origin, 0)], SEEN_SCHEMA)]
         seen_count = 1
         step = 0
-        result_deltas = []
+        result_paths = []
 
     pipeline = make_page_pipeline(cfg)
     wall_times: list[float] = []
     phase_times: list[dict] = []
-    seen = _union_all(spark, seen_deltas, SEEN_SCHEMA)
+    seen = _union_all(seen_deltas)
     # Seen rows not yet covered by a committed snapshot (the seed row on a
     # fresh start; empty on resume — everything loaded was committed). Each
     # commit flushes these so the append-only seen log stays complete.
     pending_seen = [] if (resume and ckpt is not None
                           and step > 0) else list(seen_deltas)
 
-    # approximate mode's seen-set sketch (BloomState or CuckooState); None
-    # while the crawl dedups exactly
+    # approximate mode's BloomState; None while the crawl dedups exactly
     sketch = None
 
     # robots.txt: every gate is robots_ops.apply_robots_join against the
@@ -360,7 +365,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         # result store (Iceberg-append shape; parquet fallback): content
         # bytes never return to the JVM, and every consumer is a
         # column-pruned read of that parquet (no block-manager cache).
-        step_path = os.path.join(spill_dir, f"step={step:06d}", "result")
+        step_path = _result_path(spill_dir, step)
         parquet_sink.reset_dir(step_path)
         sink = _store_sink(step_path, cfg.dry_run)
         if cfg.live_fetch:
@@ -519,7 +524,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         # Explicit schema: re-reading with inference would cost a driver job
         # per superstep just to re-discover a schema we already know.
         result_pq = spark.read.schema(_result_store_schema()).parquet(step_path)
-        result_deltas.append(result_pq)
+        result_paths.append(step_path)
 
         # Harvest Set-Cookie responses into the relay store (live mode),
         # from the rows the write job observed. The relay scopes cookies
@@ -569,7 +574,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
 
         # First-wins within the superstep (order-preserving) then the seen
         # test: an exact left-anti join against seen, or — approximate mode,
-        # once its sketch is engaged — the sketch alone (probe only, no
+        # once its bloom is engaged — the bloom alone (probe only, no
         # O(seen) shuffle).
         winners = dedup_ops.first_wins(cand, "url", "order_key")
         if sketch is not None:
@@ -659,7 +664,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         seen_delta = new_urls.select("url", "superstep")
         seen_deltas.append(seen_delta)
         pending_seen.append(seen_delta)
-        seen = _union_all(spark, seen_deltas, SEEN_SCHEMA)
+        seen = _union_all(seen_deltas)
         # Seen-delta compaction: the anti-join reads this lazy union, whose
         # plan grows one branch per superstep — at thousands of supersteps
         # the planning/serialization cost alone would dominate. Collapse the
@@ -672,22 +677,16 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         if len(seen_deltas) > SEEN_COMPACT_INTERVAL:
             seen = seen.localCheckpoint(eager=True)
             seen_deltas = [seen]
-        # Approximate mode: engage the sketch at the end of the superstep
+        # Approximate mode: engage the bloom at the end of the superstep
         # whose seen count reaches the threshold (a resumed crawl's first
         # superstep therefore runs exact), then fold in each seen DELTA —
         # O(delta) per superstep, never a rebuild over the whole seen set.
         if (cfg.seen_sketch is not None and cfg.bloom_threshold is not None
                 and seen_count >= cfg.bloom_threshold):
             if sketch is None:
-                if cfg.seen_sketch == "cuckoo":
-                    from ..operators.cuckoo import CuckooState
-                    sketch = CuckooState(
-                        "url", capacity=seen_count * CuckooState.GROWTH)
-                else:
-                    sketch = dedup_ops.BloomState(
-                        "url",
-                        capacity=seen_count * dedup_ops.BloomState.GROWTH,
-                        fpp=cfg.bloom_fpp)
+                sketch = dedup_ops.BloomState(
+                    "url", capacity=seen_count * dedup_ops.BloomState.GROWTH,
+                    fpp=cfg.bloom_fpp)
                 sketch.add(seen, seen_count)
             else:
                 sketch.add(seen_delta, new_count, full_seen=seen)
@@ -705,7 +704,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
             ckpt.commit(
                 step,
                 frontier=frontier.drop(frontier_ops.SELECTED),
-                seen_delta=_union_all(spark, pending_seen, SEEN_SCHEMA),
+                seen_delta=_union_all(pending_seen),
                 stats={"frontier_rows": frontier_count, "new_urls": new_count,
                        "wall_sec": wall},
             )
@@ -725,22 +724,25 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         # metrics are parquet-backed; seen is checkpointed).
         fetch_pages.unpersist()
 
-    results = _union_all(spark, result_deltas, _result_store_schema())
-    mirror = _mirror_view(results)
-    metrics = _metrics_view(results, seen)
+    store = (spark.read.schema(_result_store_schema()).parquet(*result_paths)
+             if result_paths
+             else local_frame(spark, [], _result_store_schema()))
+    mirror = _mirror_view(store)
+    metrics = _metrics_view(store, seen)
 
     # Canonical jobs=1 visit order (single window, finalize-only — the loop
     # itself never needs a global ordering).
     from pyspark.sql.window import Window
     w = Window.orderBy("superstep", "order_key")
-    log = _log_view(results).withColumn(
+    log = _log_view(store).withColumn(
         "visit_seq", F.row_number().over(w).cast("long")).select(
         "url", "depth", "ext_depth", "superstep", "order_key", "visit_seq",
         "downloaded", "status")
 
     return CrawlResult(
         mirror=mirror, crawl_log=log, seen=seen, metrics=metrics,
-        supersteps=step, wall_times=wall_times, phase_times=phase_times,
+        supersteps=step, store=store, wall_times=wall_times,
+        phase_times=phase_times,
         spill_dir=spill_dir, owns_spill_dir=cfg.checkpoint_dir is None,
     )
 
@@ -795,13 +797,13 @@ def _symlink_target_col():
     return F.concat(ups, F.col("filename"))
 
 
-def _union_all(spark, dfs, schema):
-    if not dfs:
-        return local_frame(spark, [], schema)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+def _union_all(dfs: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.unionByName, dfs)
+
+
+def _result_path(spill_dir: str, step: int) -> str:
+    """Where superstep ``step``'s result store lives."""
+    return os.path.join(spill_dir, f"step={step:06d}", "result")
 
 
 def _result_store_schema():

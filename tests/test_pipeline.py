@@ -59,8 +59,66 @@ def test_corpus_feeds_curation_operators(spark):
 
 def test_page_store_exposes_all_supersteps(spark):
     res = _run(spark)
-    store = pipeline.page_store(spark, res)
+    store = res.store
     assert store.select("superstep").distinct().count() == res.supersteps
     # error rows (dead cross-host links) are visible here, not in the mirror
     assert store.filter(F.col("status") == "error").count() >= 0
     res.close()
+
+
+def _chain_pages(spark, n):
+    """A site whose page i links only to page i+1: a crawl of it runs n
+    supersteps, one page each."""
+    url = "http://chain.example/p{}.html".format
+    rows = [(url(i), f'<html><body>page {i} <a href="p{i + 1}.html">next</a>'
+                     f'</body></html>'.encode(), "text/html", 200)
+            for i in range(n)]
+    return url(0), spark.createDataFrame(
+        rows, "url string, html binary, content_type string, status int")
+
+
+def test_reused_checkpoint_dir_reads_only_this_crawl(spark, tmp_path):
+    """A fresh crawl into a checkpoint_dir an earlier, longer crawl used:
+    its store, views and corpus hold only its own supersteps, not the
+    result stores the earlier crawl left on disk."""
+    origin, pages = _chain_pages(spark, 8)
+    cfg = CrawlConfig(origin=origin, checkpoint_dir=str(tmp_path / "ck"))
+    crawl(spark, cfg.with_(max_supersteps=6), pages)
+    res = crawl(spark, cfg.with_(max_supersteps=2), pages)
+    docs = pipeline.corpus_from_crawl(spark, res)
+    assert sorted(r.url for r in docs.collect()) == [
+        "http://chain.example/p0.html", "http://chain.example/p1.html"]
+    assert res.crawl_log.count() == res.mirror.count() == 2
+    assert res.store.count() == 2
+
+
+def _node_names(df):
+    """Operator names of df's physical plan, top down (no ids, no args)."""
+    import re
+
+    from suckit_spark.plans.crawl import _plan_string
+
+    return [re.match(r"[\s:|+-]*(?:\*\(\d+\) )?(\w+)", line).group(1)
+            for line in _plan_string(df, "simple").splitlines()
+            if line.strip() and not line.startswith("==")]
+
+
+def test_views_plan_is_one_store_read(spark):
+    """The views a crawl returns read the result store once: their plans
+    hold no Union over per-superstep scans, and a 3-superstep and a
+    10-superstep crawl give the same operator tree. metrics also joins the
+    seen set, whose in-memory delta union is its own (it adds no other)."""
+    origin, pages = _chain_pages(spark, 12)
+    cfg = CrawlConfig(origin=origin)
+    short = crawl(spark, cfg.with_(max_supersteps=3), pages)
+    long = crawl(spark, cfg.with_(max_supersteps=10), pages)
+    assert (short.supersteps, long.supersteps) == (3, 10)
+    for name in ("store", "crawl_log", "mirror"):
+        plan = _node_names(getattr(long, name))
+        assert "Union" not in plan, name
+        assert _node_names(getattr(short, name)) == plan, name
+    for res in (short, long):
+        assert (_node_names(res.metrics).count("Union")
+                == _node_names(res.seen).count("Union"))
+    short.close()
+    long.close()

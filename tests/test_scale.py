@@ -1,5 +1,5 @@
 """Scale machinery: synthetic corpus crawl parity, skewed mega-host, the
-approximate seen-set sketches, politeness budgets, checkpoint/resume."""
+approximate bloom seen-set, politeness budgets, checkpoint/resume."""
 
 import pytest
 
@@ -110,16 +110,15 @@ def probes(monkeypatch):
     return calls
 
 
-def test_bloom_unit(spark, monkeypatch):
+def test_bloom_unit(spark):
     """BloomState never reports an added url unseen: after the bulk first
-    add and after incremental adds through both delta paths (raw
-    positions; OR-aggregated words once the position cap is forced to 0)."""
+    add and after each of two incremental adds (a delta's OR-aggregated
+    words folded into the driver-held blobs)."""
     st = dedup_ops.BloomState("url", capacity=4000, fpp=0.01)
     st.add(urls_df(spark, 0, 1000), 1000)
     assert unseen(spark, st, 0, 1000) == set()
     st.add(urls_df(spark, 1000, 1500), 500)
     assert unseen(spark, st, 0, 1500) == set()
-    monkeypatch.setattr(dedup_ops, "MAX_DELTA_POSITIONS", 0)
     st.add(urls_df(spark, 1500, 2000), 500)
     assert unseen(spark, st, 0, 2000) == set()
     new = unseen(spark, st, 2000, 3000)
@@ -141,9 +140,24 @@ def test_bloom_multi_range(spark, monkeypatch):
     assert len(unseen(spark, st, 2000, 2500)) >= 475
 
 
-@pytest.mark.parametrize("sketch", ["bloom", "cuckoo"])
+def test_bloom_growth_without_full_seen_raises(spark):
+    """An add past capacity without full_seen raises before mutating; the
+    retry with full_seen rebuilds the grown geometry (capacity x GROWTH)
+    and no url added before or in the growing delta reads unseen."""
+    st = dedup_ops.BloomState("url", capacity=1000, fpp=0.03)
+    st.add(urls_df(spark, 0, 900), 900)
+    with pytest.raises(ValueError, match="full_seen"):
+        st.add(urls_df(spark, 900, 3000), 2100)
+    # previously-added urls still read seen (state not corrupted by the raise)
+    assert unseen(spark, st, 0, 900) == set()
+    st.add(urls_df(spark, 900, 3000), 2100, full_seen=urls_df(spark, 0, 3000))
+    assert (st.capacity, st.count) == (1000 * st.GROWTH, 3000)
+    assert unseen(spark, st, 0, 3000) == set()
+
+
+@pytest.mark.parametrize("sketch", ["bloom"])
 def test_seen_sketch_mode_matches_oracle(spark, probes, sketch):
-    """Approximate seen-set mode: once the sketch engages (after superstep
+    """Approximate seen-set mode: once the bloom engages (after superstep
     0 here), dedup is probe-only, with no anti-join against seen. With a
     tight fpp on a small corpus the deterministic hash family yields zero
     false positives, so the crawl equals the oracle's; in general an
@@ -162,8 +176,9 @@ def test_seen_sketch_mode_matches_oracle(spark, probes, sketch):
 
 
 def test_seen_sketch_is_validated():
-    with pytest.raises(ValueError, match="seen_sketch"):
-        CrawlConfig(origin=origin(), seen_sketch="bloomier")
+    for sketch in ("bloomier", "cuckoo"):
+        with pytest.raises(ValueError, match="seen_sketch"):
+            CrawlConfig(origin=origin(), seen_sketch=sketch)
 
 
 def test_host_budget_defers_not_drops(spark):
