@@ -293,11 +293,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["ngram_jaccard_pairs"] = lambda spark, sf: webtext.ngram_jaccard_pairs(
         _t(spark, sf, "documents"), n=3, threshold=0.2, max_df=20)
 
-    # AllPairs prefix-filtered exact Jaccard (same output as the uncapped
-    # posting self-join; the oracle is the plain uncapped SQL)
-    q["ngram_jaccard_prefix"] = lambda spark, sf: (
-        webtext.ngram_jaccard_pairs_prefix(
-            _t(spark, sf, "documents"), n=3, threshold=0.2))
+    # exact uncapped Jaccard: the row keeps its name, but the prefix-filtered
+    # join it used to run was retired (slower at the measured scale,
+    # BENCH/PREFIX_JOIN.md); the one uncapped equi-self-join gives the same
+    # pairs, checked against the plain uncapped SQL
+    q["ngram_jaccard_prefix"] = lambda spark, sf: webtext.ngram_jaccard_pairs(
+        _t(spark, sf, "documents"), n=3, threshold=0.2, max_df=None)
 
     q["near_dup_clusters"] = lambda spark, sf: webtext.near_dup_clusters(
         webtext.ngram_jaccard_pairs(
@@ -704,8 +705,7 @@ def oracle_sql() -> dict[str, str]:
     # connected components over the ngram pair graph: recursive transitive
     # closure, component id = min reachable doc id (matches the Spark
     # min-label propagation fixpoint)
-    # prefix-filtered twin: the UNCAPPED pair SQL (no df cap) — prefix
-    # filtering is exact, so the oracle needs no knowledge of it
+    # uncapped twin: the pair SQL without a df cap
     o["ngram_jaccard_prefix"] = f"""
         WITH base AS (
           SELECT doc_id, {_TOKENS} AS toks FROM documents

@@ -91,40 +91,6 @@ def make_ssl_context(cfg: CrawlConfig) -> ssl.SSLContext:
     return ctx
 
 
-#: Per-worker-process cookie jars, keyed by the crawl's session token
-#: (crawl() mints one per run). Spark reuses python workers across tasks
-#: (``spark.python.worker.reuse``), so a jar keyed here survives from one
-#: superstep's fetch stage to the next within each worker — the distributed
-#: analogue of the reference's single client-wide cookie store
-#: (downloader.rs:73-83): ``jobs=N`` behaves like N independent clients,
-#: each with its own accumulating jar. Insertion-ordered and capped at
-#: ``_PROCESS_JARS_MAX`` distinct crawl tokens: the worker outlives the
-#: crawl and nothing ever signals "this crawl ended" to every executor, so
-#: without the cap a long-lived session running many live crawls (bench
-#: loops; speed_regression runs 9 per invocation) accumulates one jar per
-#: crawl forever. LRU is exact here — a superstep only ever touches its own
-#: crawl's key, so evicting the oldest key can only hit a finished crawl
-#: (or, pathologically, one of >4 crawls interleaving fetch stages inside
-#: one worker, which merely costs that crawl its accumulated cookies, never
-#: correctness of the relay path).
-_PROCESS_JARS_MAX = 4
-_PROCESS_JARS: dict = {}
-
-
-def _process_jar(jar_key: str):
-    """Fetch-or-create the worker-process jar for this crawl token, keeping
-    the cache LRU-bounded (see ``_PROCESS_JARS``)."""
-    import http.cookiejar
-
-    jar = _PROCESS_JARS.pop(jar_key, None)
-    if jar is None:
-        jar = http.cookiejar.CookieJar()
-    _PROCESS_JARS[jar_key] = jar   # (re-)insert at MRU position
-    while len(_PROCESS_JARS) > _PROCESS_JARS_MAX:
-        _PROCESS_JARS.pop(next(iter(_PROCESS_JARS)))
-    return jar
-
-
 class _ConnectionPool:
     """Per-host keep-alive connections for one opener (reference parity:
     reqwest's blocking ``Client`` pools connections by default,
@@ -218,23 +184,22 @@ class _PooledHTTPSHandler(urllib.request.HTTPSHandler):
                 host, timeout=timeout, context=self._context), req)
 
 
-def _default_opener(cfg: CrawlConfig, jar_key: str | None = None):
+def _default_opener(cfg: CrawlConfig):
     """One opener per fetch partition: TLS context, per-host KEEP-ALIVE
     connections (:class:`_ConnectionPool` — reference parity with reqwest's
     pooled blocking client), plus an ACCUMULATING cookie jar (reference
     ``cookie_store(true)``, downloader.rs:73-83), so a ``Set-Cookie`` issued
-    by one response rides along on every later request this opener (and, via
-    ``jar_key``, this worker process) makes — a login-walled site that hands
-    out a session cookie mid-crawl keeps working. The static ``--cookie``
-    header still wins on conflict: ``CookieJar.add_cookie_header`` only
-    fills in a Cookie header when the request doesn't already carry one (and
-    :func:`build_request` sets it explicitly when ``cfg.cookie`` is
-    given)."""
+    by one response rides along, RFC-scoped, on every later request this
+    opener makes. Across supersteps, cookies reach requests through the
+    crawl's driver relay instead (``make_fetch``'s ``relay_cookies``). The
+    static ``--cookie`` header and the relay's header win on conflict:
+    ``CookieJar.add_cookie_header`` only fills in a Cookie header when the
+    request doesn't already carry one (:func:`build_request` sets it
+    explicitly)."""
     import http.cookiejar
 
     ctx = make_ssl_context(cfg)
-    jar = (http.cookiejar.CookieJar() if jar_key is None
-           else _process_jar(jar_key))
+    jar = http.cookiejar.CookieJar()
     pool = _ConnectionPool()
     url_opener = urllib.request.build_opener(
         _PooledHTTPHandler(pool),
@@ -420,7 +385,7 @@ def render_cookie_headers(store: dict) -> dict[str, dict[str, str]]:
     return out
 
 
-def make_fetch(cfg: CrawlConfig, jar_key: str | None = None,
+def make_fetch(cfg: CrawlConfig,
                relay_cookies: dict[str, dict[str, str]] | None = None,
                host_delays: dict[str, float] | None = None):
     """The live S2 as a batch generator function: pandas batches of selected
@@ -429,19 +394,18 @@ def make_fetch(cfg: CrawlConfig, jar_key: str | None = None,
     the page pipeline inside ONE ``mapInPandas`` (``pipeline(fetch(batches))``),
     so a live superstep pays one Python worker per fetch task, not two.
 
-    ``jar_key`` (crawl() passes a per-run token) keys the worker-process
-    cookie jar so Set-Cookie state accumulates across this crawl's
-    supersteps (see ``_PROCESS_JARS``); ``relay_cookies`` (host -> scheme ->
-    rendered Cookie header, from :func:`render_cookie_headers`) is the
-    driver-relayed session-cookie state from PREVIOUS supersteps —
-    worker-agnostic, so a cookie minted on one executor reaches requests on
-    every other; the per-scheme split keeps Secure cookies off plain-http
-    requests. ``host_delays`` holds robots.txt Crawl-delays by host."""
+    ``relay_cookies`` (host -> scheme -> rendered Cookie header, from
+    :func:`render_cookie_headers`) is the driver-relayed session-cookie
+    state from PREVIOUS supersteps, the one path by which cookies cross
+    supersteps — worker-agnostic, so a cookie minted on one executor
+    reaches requests on every other; the per-scheme split keeps Secure
+    cookies off plain-http requests. ``host_delays`` holds robots.txt
+    Crawl-delays by host."""
     relay = relay_cookies or {}
     delays = host_delays or {}
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        opener = _default_opener(cfg, jar_key=jar_key)
+        opener = _default_opener(cfg)
         try:
             for pdf in batches:
                 out = []
@@ -492,14 +456,3 @@ def fetch_partitions(frontier: DataFrame, cfg: CrawlConfig,
     if cfg.jobs and cfg.jobs > 0:
         return frontier.repartition(min(cfg.jobs, rows or cfg.jobs))
     return frontier
-
-
-def fetch_frontier(frontier: DataFrame, cfg: CrawlConfig,
-                   jar_key: str | None = None,
-                   relay_cookies: dict[str, dict[str, str]] | None = None,
-                   host_delays: dict[str, float] | None = None) -> DataFrame:
-    """The live S2 on its own: the selected frontier mapped to fetched rows,
-    partition-parallel, no shuffle (:func:`make_fetch` holds the
-    arguments' meaning)."""
-    return fetch_partitions(frontier, cfg).mapInPandas(
-        make_fetch(cfg, jar_key, relay_cookies, host_delays), FETCHED_SCHEMA)

@@ -80,6 +80,29 @@ def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
     return df.repartition(parallelism, key)
 
 
+def _distinct_shingles(documents: DataFrame, n: int,
+                       alias: str = "shingle") -> DataFrame:
+    """``(doc_id, <alias>)``: one row per distinct word n-gram of each
+    document, the fan-out every shingle-keyed operator starts from."""
+    return _spread(documents).select(
+        "doc_id",
+        F.explode(F.array_distinct(shingles_col(tokens_col(), n)))
+        .alias(alias))
+
+
+def _array_pairs(docs: Column) -> Column:
+    """Every ``struct(doc_a, doc_b)`` with ``doc_a < doc_b`` drawn from one
+    member array, built inside the row. Only for arrays whose size a cap
+    bounds (``max_df``, ``max_bucket``): the output is size² structs."""
+    ds = F.array_sort(docs)
+    return F.filter(
+        F.flatten(F.transform(
+            ds, lambda x: F.transform(ds, lambda y: F.struct(
+                x.alias("doc_a"), y.alias("doc_b"))))),
+        lambda s: s["doc_a"] < s["doc_b"],
+    )
+
+
 # --------------------------------------------------------------------------
 # deduplication
 # --------------------------------------------------------------------------
@@ -120,7 +143,9 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
     pair fan-out of a hot shingle is then spread across shuffle tasks (and
     AQE's skew-join splitting) instead of materializing O(df²) structs inside
     a single array row, which would OOM one executor on the first
-    df≈N stop-shingle.
+    df≈N stop-shingle. It is the one exact uncapped join: prefix filtering
+    (AllPairs) emits fewer candidate rows but ran slower end to end at the
+    measured scale (``BENCH/PREFIX_JOIN.md``).
     """
     # No .persist() on the shared intermediates: ``sh`` (and ``postings``
     # below) each feed two consumers, but the expensive part — the exchange
@@ -130,10 +155,7 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
     # recomputes. Caching them instead leaked block-manager memory for the
     # session lifetime (round-2 finding: repeated calls accumulated cached
     # shingle tables until eviction thrash).
-    sh = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(tokens_col(), n))).alias("shingle"),
-    )
+    sh = _distinct_shingles(documents, n)
     if max_df is None:
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
         a = sh.select(F.col("shingle"), F.col("doc_id").alias("doc_a"))
@@ -144,41 +166,20 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
             .groupBy("doc_a", "doc_b")
             .agg(F.count("*").alias("inter"))
         )
-        sa = sizes.select(F.col("doc_id").alias("doc_a"),
-                          F.col("sz").alias("sz_a"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"),
-                          F.col("sz").alias("sz_b"))
-        return (
-            inter.join(sa, "doc_a").join(sb, "doc_b")
-            .withColumn(
-                "jaccard",
-                F.round(F.col("inter")
-                        / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
+    else:
+        postings = sh.groupBy("shingle").agg(
+            F.collect_list("doc_id").alias("docs"))
+        postings = postings.filter(F.size("docs") <= max_df)
+        sizes = (
+            postings.select(F.explode("docs").alias("doc_id"))
+            .groupBy("doc_id").agg(F.count("*").alias("sz"))
         )
-
-    postings = sh.groupBy("shingle").agg(
-        F.collect_list("doc_id").alias("docs"))
-    postings = postings.filter(F.size("docs") <= max_df)
-
-    sizes = (
-        postings.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id").agg(F.count("*").alias("sz"))
-    )
-    ds = F.array_sort(F.col("docs"))
-    pair_structs = F.filter(
-        F.flatten(F.transform(
-            ds, lambda x: F.transform(ds, lambda y: F.struct(
-                x.alias("doc_a"), y.alias("doc_b"))))),
-        lambda s: s["doc_a"] < s["doc_b"],
-    )
-    inter = (
-        postings.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"),
-                 F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+        inter = (
+            postings.select(F.explode(_array_pairs(F.col("docs"))).alias("p"))
+            .groupBy(F.col("p.doc_a").alias("doc_a"),
+                     F.col("p.doc_b").alias("doc_b"))
+            .agg(F.count("*").alias("inter"))
+        )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
     return (
@@ -189,82 +190,6 @@ def ngram_jaccard_pairs(documents: DataFrame, n: int = 3,
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-
-
-def ngram_jaccard_pairs_prefix(documents: DataFrame, n: int = 3,
-                               threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard near-dup pairs via AllPairs/PPJoin prefix filtering
-    (Bayardo et al. 2007; Xiao et al. 2008) — same output as the uncapped
-    ``ngram_jaccard_pairs``, asymptotically fewer candidates.
-
-    Order every document's distinct shingles by ascending global document
-    frequency (rarest first, ties by shingle); a pair with J >= t MUST share
-    a shingle within each side's first ``sz - ceil(t*sz) + 1`` entries
-    (if all common shingles sat in x's suffix of size ceil(t*sz)-1, then
-    inter < t*sz <= t*union — contradiction). So the self-join runs over
-    PREFIXES only — at t=0.8 that is ~20% of the postings, cutting the
-    candidate fan-out of the hot (frequent) shingles, which by construction
-    sort LAST and mostly fall outside every prefix. Survivors get their
-    exact intersection from one ``array_intersect`` over the two full
-    shingle arrays — no second pass over the posting lists.
-
-    The prefix length uses exact rational arithmetic (``Fraction`` →
-    integer div) — a float ``ceil(t*sz)`` can land one ulp high and shrink
-    the prefix below the sound bound, silently dropping true pairs.
-
-    Scale shape: df-count (one shuffle), per-doc array build (one shuffle),
-    prefix self-join (equi-join on shingle, skew-limited because hot
-    shingles are suffix-ranked), candidate-pair dedup, two array joins.
-    More stages than the posting join, but candidate volume — the term that
-    explodes at 100 TB — drops from sum(df^2) over ALL shingles to
-    sum(df_prefix^2) over rare ones. Measured tradeoff (slower wall-clock at
-    bench scale, 1.5-10.4x candidate reduction growing with the threshold):
-    BENCH/PREFIX_JOIN.md.
-    """
-    from fractions import Fraction
-
-    frac = Fraction(threshold).limit_denominator(10**6)
-    t_num, t_den = frac.numerator, frac.denominator
-
-    sh = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(tokens_col(), n)))
-        .alias("shingle"))
-    dfc = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    arr = (
-        sh.join(dfc, "shingle")
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "shingle")))
-             .alias("ss"))
-        .select(
-            "doc_id",
-            F.transform("ss", lambda x: x["shingle"]).alias("toks"),
-            F.size("ss").alias("sz")))
-    # exact ceil(t*sz) = (t_num*sz + t_den - 1) div t_den, all integers
-    plen = F.expr(
-        f"cast(sz - (({t_num} * sz + {t_den} - 1) div {t_den}) + 1 as int)")
-    pref = arr.select(
-        "doc_id", F.explode(F.slice("toks", F.lit(1), plen)).alias("shingle"))
-    cand = (
-        pref.select(F.col("shingle"), F.col("doc_id").alias("doc_a"))
-        .join(pref.select(F.col("shingle"), F.col("doc_id").alias("doc_b")),
-              "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b").distinct())
-    A = arr.select(F.col("doc_id").alias("doc_a"),
-                   F.col("toks").alias("toks_a"), F.col("sz").alias("sz_a"))
-    B = arr.select(F.col("doc_id").alias("doc_b"),
-                   F.col("toks").alias("toks_b"), F.col("sz").alias("sz_b"))
-    inter = F.size(F.array_intersect(F.col("toks_a"), F.col("toks_b")))
-    return (
-        cand.join(A, "doc_a").join(B, "doc_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter")
-                    / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard"))
 
 
 def near_dup_clusters(pairs: DataFrame, id_a: str = "doc_a",
@@ -339,10 +264,7 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = 16,
                        n: int = 3) -> DataFrame:
     """MinHash signatures: k independent md5-salted hash functions, one
     shuffle (explode shingles -> groupBy doc with k ``min`` aggregates)."""
-    sh = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(tokens_col(), n))).alias("shingle"),
-    )
+    sh = _distinct_shingles(documents, n)
     aggs = [
         F.min(_md5_bucket(F.col("shingle"), f"{i}:")).alias(f"h{i}")
         for i in range(num_hashes)
@@ -389,15 +311,8 @@ def minhash_lsh_pairs(documents: DataFrame, num_hashes: int = 16,
             .agg(F.collect_list("doc_id").alias("docs"))
             .filter(F.size("docs") <= max_bucket)
         )
-        ds = F.array_sort(F.col("docs"))
-        pair_structs = F.filter(
-            F.flatten(F.transform(
-                ds, lambda x: F.transform(ds, lambda y: F.struct(
-                    x.alias("doc_a"), y.alias("doc_b"))))),
-            lambda s: s["doc_a"] < s["doc_b"],
-        )
         return (
-            buckets.select(F.explode(pair_structs).alias("p"))
+            buckets.select(F.explode(_array_pairs(F.col("docs"))).alias("p"))
             .select(F.col("p.doc_a").alias("doc_a"),
                     F.col("p.doc_b").alias("doc_b"))
             .distinct()
@@ -509,21 +424,32 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the single query row, one pass over
-    the corpus, global top-k (orderBy+limit = distributed TakeOrdered)."""
-    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("q"))
-    joined = embeddings.crossJoin(F.broadcast(q))
-    cos = _dot(F.col("embedding"), F.col("q")) / (
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(_dot(F.col("q"), F.col("q"))))
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine of two array columns over :func:`_dot` folds."""
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+
+
+def _cosine_topk_of(cand: DataFrame, query_vec_id: int, k: int) -> DataFrame:
+    """The top-k tail every search shares: score ``embedding`` against the
+    query vector ``q``, drop the query row itself, order by cosine desc then
+    vec_id, keep k (orderBy+limit = distributed TakeOrdered)."""
     return (
-        joined.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", F.round(cos, 6).alias("cosine"))
+        cand.filter(F.col("vec_id") != query_vec_id)
+        .select("vec_id", "label",
+                F.round(_cosine(F.col("embedding"), F.col("q")), 6)
+                .alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
+
+
+def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+    """Brute-force cosine top-k: broadcast the single query row, one pass over
+    the corpus, global top-k."""
+    q = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("q"))
+    return _cosine_topk_of(
+        embeddings.crossJoin(F.broadcast(q)), query_vec_id, k)
 
 
 def lsh_hyperplanes(dim: int, num_planes: int = 16) -> list[list[float]]:
@@ -540,6 +466,16 @@ def lsh_hyperplanes(dim: int, num_planes: int = 16) -> list[list[float]]:
     return planes
 
 
+def _sign_bits(planes: list[list[float]]) -> Column:
+    """Hyperplane signature of ``embedding``: bit p is set iff its dot
+    product with ``planes[p]`` is positive."""
+    sig = F.lit(0).cast("long")
+    for p, plane in enumerate(planes):
+        dot = _dot(F.col("embedding"), F.array(*[F.lit(v) for v in plane]))
+        sig = sig + F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(0)
+    return sig
+
+
 def ann_lsh_buckets(embeddings: DataFrame, num_planes: int = 12,
                     dim: int = 64) -> DataFrame:
     """Random-hyperplane LSH bucketing: the scale path for ANN. Each vector's
@@ -547,11 +483,7 @@ def ann_lsh_buckets(embeddings: DataFrame, num_planes: int = 12,
     hyperplanes; neighbor search then probes only the matching bucket (plus
     multi-probe neighbors), turning an O(N) scan into an O(N/2^planes)
     bucket lookup co-located by the bucket join key."""
-    planes = lsh_hyperplanes(dim, num_planes)
-    sig = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        dot = _dot(F.col("embedding"), F.array(*[F.lit(v) for v in plane]))
-        sig = sig + F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(0)
+    sig = _sign_bits(lsh_hyperplanes(dim, num_planes))
     return embeddings.select("vec_id", "label", sig.alias("bucket"))
 
 
@@ -563,16 +495,9 @@ def ann_bucketed_topk(embeddings: DataFrame, query_vec_id: int = 0,
     with_b = embeddings.join(buckets.select("vec_id", "bucket"), "vec_id")
     qb = with_b.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q"), F.col("bucket").alias("qb"))
-    cand = with_b.join(F.broadcast(qb), F.col("bucket") == F.col("qb"))
-    cos = _dot(F.col("embedding"), F.col("q")) / (
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(_dot(F.col("q"), F.col("q"))))
-    return (
-        cand.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(k)
-    )
+    return _cosine_topk_of(
+        with_b.join(F.broadcast(qb), F.col("bucket") == F.col("qb")),
+        query_vec_id, k)
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9) -> DataFrame:
@@ -587,9 +512,7 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.9) -> DataFra
     b = embeddings.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = _dot(F.col("ea"), F.col("eb")) / (
-        F.sqrt(_dot(F.col("ea"), F.col("ea")))
-        * F.sqrt(_dot(F.col("eb"), F.col("eb"))))
+    cos = _cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
@@ -610,15 +533,10 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.9,
     precision at 1.0. Output schema matches :func:`embedding_near_dup`
     (a subset of it, by construction)."""
     planes = lsh_hyperplanes(dim, num_planes * num_tables)
-    tables = []
-    for t in range(num_tables):
-        sig = F.lit(0).cast("long")
-        for p in range(num_planes):
-            plane = planes[t * num_planes + p]
-            dot = _dot(F.col("embedding"), F.array(*[F.lit(v) for v in plane]))
-            sig = sig + F.when(
-                dot > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(0)
-        tables.append(F.struct(F.lit(t).alias("t"), sig.alias("sig")))
+    tables = [
+        F.struct(F.lit(t).alias("t"), _sign_bits(
+            planes[t * num_planes:(t + 1) * num_planes]).alias("sig"))
+        for t in range(num_tables)]
     keyed = embeddings.select(
         "vec_id", "embedding",
         F.explode(F.array(*tables)).alias("tb"),
@@ -635,9 +553,7 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.9,
         a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])      # union across tables
     )
-    cos = _dot(F.col("ea"), F.col("eb")) / (
-        F.sqrt(_dot(F.col("ea"), F.col("ea")))
-        * F.sqrt(_dot(F.col("eb"), F.col("eb"))))
+    cos = _cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.select("vec_a", "vec_b", F.round(cos, 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
@@ -668,43 +584,10 @@ def kmeans_centroids(embeddings: DataFrame, n_centroids: int,
     return spark.createDataFrame(rows, "cid int, cv array<double>")
 
 
-def _centroid_scores(cent_rows: list) -> Column:
-    """Per-row array of ``struct<ccos, negcid>`` — the cosine of the row's
-    ``embedding`` against every centroid in ``cent_rows`` (a driver-side list
-    of ``(cid, cv)``), as ONE codegen'd expression: no join, no explode, no
-    shuffle. ``ccos`` is rounded to 12 digits before any comparison so the
-    assignment is stable across engines/summation orders (a last-ulp
-    difference must not flip a cell); ``negcid`` makes lexicographic
-    struct-max/sort break ties toward the SMALLEST cid."""
-    e = F.col("embedding")
-    enorm = F.sqrt(_dot(e, e))
-    cent_arr = F.array(*[
-        F.struct(
-            F.lit(int(cid)).alias("cid"),
-            F.array(*[F.lit(float(v)) for v in cv]).alias("cv"))
-        for cid, cv in cent_rows])
-    return F.transform(
-        cent_arr,
-        lambda c: F.struct(
-            F.round(
-                _dot(e, c["cv"])
-                / (enorm * F.sqrt(_dot(c["cv"], c["cv"]))), 12).alias("ccos"),
-            (-c["cid"]).alias("negcid")))
-
-
-#: Max centroid count for the literal-expression assignment form. Past this
-#: the codegen'd literal array stops being "a small broadcast constant" and
-#: becomes a multi-megabyte expression tree (compile time + code-cache
-#: pressure grow with it); real IVF sizes n_centroids ~ sqrt(N) (~1e5 at the
-#: 1e10 design point), which only the matmul path can carry.
-IVF_LITERAL_MAX = 1024
-
-
 def _normalized_centroid_matrix(cent_rows: list):
-    """(sorted cid vector, row-normalized centroid matrix) as numpy arrays —
+    """(sorted cid vector, row-normalized centroid matrix) as numpy arrays,
     ordered by ascending cid so a first-max argmax breaks score ties toward
-    the smallest cid, exactly like the literal form's lexicographic
-    struct-max over (ccos, -cid)."""
+    the smallest cid."""
     import numpy as np
 
     cids = np.array([int(cid) for cid, _ in cent_rows], dtype=np.int64)
@@ -717,16 +600,15 @@ def _normalized_centroid_matrix(cent_rows: list):
     return cids, mat / norms
 
 
-def _ivf_assign_matmul(embeddings: DataFrame, cent_rows: list) -> DataFrame:
-    """Large-centroid cell assignment: a vectorized Pandas UDF over a
-    broadcast numpy centroid matrix — ONE BLAS matmul per Arrow batch
-    (``(batch × dim) @ (dim × n_centroids)``), then a per-row argmax. Still a
-    pure projection (no Join/Window/Exchange — same plan pin as the literal
-    form); the constant ships to executors once inside the serialized UDF
-    closure instead of inside the plan, so n_centroids ~ 1e5 costs megabytes
-    of closure, not megabytes of codegen. Scores round to 12 digits before
-    the argmax — the same ulp-flip guard as :func:`_centroid_scores`, so the
-    two strategies agree exactly (parity-tested)."""
+def ivf_assign_cells(embeddings: DataFrame, cent_rows: list) -> DataFrame:
+    """IVF cell assignment: each vector's nearest centroid by cosine, from
+    an Arrow-batched Pandas UDF — one BLAS matmul per batch (``(batch ×
+    dim) @ (dim × n_centroids)``) over the numpy centroid matrix the UDF
+    closure ships, then a per-row argmax. A pure projection (no Join,
+    Window or Exchange; plan-pinned), so n_centroids ~ sqrt(N) costs
+    megabytes of closure, not of plan. Scores round to 12 digits before the
+    argmax (a last-ulp difference must not flip a cell); ties go to the
+    smallest cid."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -752,44 +634,6 @@ def _ivf_assign_matmul(embeddings: DataFrame, cent_rows: list) -> DataFrame:
         "vec_id", "label", "embedding", assign("embedding").alias("cid"))
 
 
-def ivf_assign_cells(embeddings: DataFrame, cent_rows: list,
-                     strategy: str = "auto") -> DataFrame:
-    """The IVF cell-assignment stage, isolated so its plan shape is
-    testable. Two strategies, both pure projections (no Join, no Window, no
-    Exchange — ``tests/test_plans.py`` pins this), both O(N * n_centroids *
-    dim) multiply-adds, both rounding scores to 12 digits with ties toward
-    the smallest cid:
-
-    - ``"literal"``: per-row argmax by (ccos desc, cid asc) via a
-      lexicographic struct ``array_max`` over the :func:`_centroid_scores`
-      literal — whole-stage-codegen JVM arithmetic, zero Python. The right
-      plan up to :data:`IVF_LITERAL_MAX` centroids; REFUSED beyond it (a
-      1e5-centroid literal is a multi-megabyte expression tree that must
-      never be built silently).
-    - ``"matmul"``: :func:`_ivf_assign_matmul` — Arrow-batched Pandas UDF,
-      one BLAS matmul per batch over a broadcast numpy centroid matrix. The
-      real-IVF-scale path (n_centroids ~ sqrt(N)).
-
-    ``"auto"`` (default) picks literal up to the threshold, matmul past it.
-    """
-    if strategy == "auto":
-        strategy = ("literal" if len(cent_rows) <= IVF_LITERAL_MAX
-                    else "matmul")
-    if strategy == "matmul":
-        return _ivf_assign_matmul(embeddings, cent_rows)
-    if strategy != "literal":
-        raise ValueError(f"unknown IVF assignment strategy: {strategy!r}")
-    if len(cent_rows) > IVF_LITERAL_MAX:
-        raise ValueError(
-            f"refusing the literal IVF assignment for {len(cent_rows)} "
-            f"centroids (> IVF_LITERAL_MAX={IVF_LITERAL_MAX}): the literal "
-            f"expression tree grows with every centroid — use "
-            f"strategy='matmul' (or 'auto')")
-    best = F.array_max(_centroid_scores(cent_rows))
-    return embeddings.select(
-        "vec_id", "label", "embedding", (-best["negcid"]).alias("cid"))
-
-
 def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
              n_centroids: int = 16, n_probe: int = 4, dim: int = 64,
              centroids: str = "prefix") -> DataFrame:
@@ -801,20 +645,13 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
     (:func:`kmeans_centroids` — pays one training job for cells that follow
     the data distribution, higher recall on clustered corpora).
 
-    Cell assignment (see :func:`ivf_assign_cells`) is a pure projection in
-    both regimes — zero shuffle, zero join, zero window, O(N * n_centroids *
-    dim) multiply-adds: up to :data:`IVF_LITERAL_MAX` centroids it is a
-    per-row JVM argmax over a literal centroid array (whole-stage codegen);
-    past that it switches automatically to the Arrow-batched Pandas-UDF BLAS
-    matmul over a broadcast numpy matrix (real IVF sizes n_centroids ≈
-    sqrt(N) — a literal expression tree cannot carry 1e5 centroids). The
-    probe side switches with it: literal sort-and-slice on the query row, or
-    a driver-side numpy point computation (one query row × n_centroids) in
-    the matmul regime. (The r3 shape — broadcast-join every vector against
-    every centroid then window-rank per vec_id — materialized N*n_centroids
-    rows AND shuffled them; that is a scale-killer and is plan-pinned out.)
-    Only the tiny centroid table is ever collected to the driver.
+    Assignment is :func:`ivf_assign_cells`, a pure projection. The probe set
+    is a point computation on the driver (one query row × n_centroids in
+    numpy, same rounding and tie rule), broadcast-joined onto the assigned
+    cells. Only the centroid table and the query row are collected.
     """
+    import numpy as np
+
     if centroids == "kmeans":
         cents = kmeans_centroids(embeddings, n_centroids)
     else:
@@ -822,51 +659,23 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10,
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
     cent_rows = [(r["cid"], r["cv"]) for r in cents.collect()]
     assigned = ivf_assign_cells(embeddings, cent_rows)
-    # The probe set is the query row's n_probe best cells.
-    if len(cent_rows) <= IVF_LITERAL_MAX:
-        # literal regime: sort the same score array descending on the single
-        # query row and explode the head — all JVM-side.
-        scores = _centroid_scores(cent_rows)
-        probe = (
-            embeddings.filter(F.col("vec_id") == query_vec_id)
-            .select(F.col("embedding").alias("q"),
-                    F.slice(F.sort_array(scores, asc=False), 1, n_probe)
-                    .alias("top"))
-            .select("q", F.explode("top").alias("t"))
-            .select((-F.col("t.negcid")).alias("cid"), "q"))
-    else:
-        # matmul regime: the probe is a POINT computation (one query row ×
-        # n_centroids) — numpy on the driver, same 12-digit rounding and
-        # smallest-cid tie rule, then a tiny literal probe DataFrame. The
-        # only driver collect is the single query row.
-        import numpy as np
-
-        qrow = (embeddings.filter(F.col("vec_id") == query_vec_id)
-                .select("embedding").collect())
-        if not qrow:
-            return embeddings.sparkSession.createDataFrame(
-                [], "vec_id int, label string, cosine double")
-        q = np.asarray([float(v) for v in qrow[0]["embedding"]],
-                       dtype=np.float64)
-        cids, cn = _normalized_centroid_matrix(cent_rows)
-        qn = np.linalg.norm(q) or 1.0
-        qscores = np.round((cn @ q) / qn, 12)
-        # stable argsort on (-score, cid): cids are ascending, so a stable
-        # sort by -score keeps smaller cids first among ties
-        top = cids[np.argsort(-qscores, kind="stable")[:n_probe]]
-        probe = embeddings.sparkSession.createDataFrame(
-            [(int(c),) for c in top], "cid int"
-        ).select("cid", F.array(*[F.lit(float(v)) for v in q]).alias("q"))
-    cand = assigned.join(F.broadcast(probe), "cid")
-    cos = _dot(F.col("embedding"), F.col("q")) / (
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-        * F.sqrt(_dot(F.col("q"), F.col("q"))))
-    return (
-        cand.filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", F.round(cos, 6).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .limit(k)
-    )
+    qrow = (embeddings.filter(F.col("vec_id") == query_vec_id)
+            .select("embedding").collect())
+    if not qrow:
+        return embeddings.sparkSession.createDataFrame(
+            [], "vec_id int, label string, cosine double")
+    q = np.asarray([float(v) for v in qrow[0]["embedding"]], dtype=np.float64)
+    cids, cn = _normalized_centroid_matrix(cent_rows)
+    qn = np.linalg.norm(q) or 1.0
+    qscores = np.round((cn @ q) / qn, 12)
+    # stable argsort on (-score, cid): cids are ascending, so a stable sort
+    # by -score keeps smaller cids first among ties
+    top = cids[np.argsort(-qscores, kind="stable")[:n_probe]]
+    probe = embeddings.sparkSession.createDataFrame(
+        [(int(c),) for c in top], "cid int"
+    ).select("cid", F.array(*[F.lit(float(v)) for v in q]).alias("q"))
+    return _cosine_topk_of(
+        assigned.join(F.broadcast(probe), "cid"), query_vec_id, k)
 
 
 # --------------------------------------------------------------------------
@@ -1016,10 +825,7 @@ def benchmark_overlap(documents: DataFrame, benchmark: DataFrame,
     cross product. Benchmark sets are typically tiny next to the corpus;
     AQE broadcasts the build side automatically, so the corpus side needs
     no extra exchange beyond the explode's."""
-    sh = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(tokens_col(), n)))
-        .alias("shingle"))
+    sh = _distinct_shingles(documents, n)
     bench_sh = (
         benchmark.select(
             F.explode(F.array_distinct(shingles_col(tokens_col(), n)))
@@ -1057,10 +863,7 @@ def repeated_spans(documents: DataFrame, w: int = 10,
     window frequency, one equi-join back, one per-doc aggregation — all
     map-side combinable; never quadratic (frequency is counted, not paired).
     """
-    win = _spread(documents).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles_col(tokens_col(), w)))
-        .alias("span"))
+    win = _distinct_shingles(documents, w, alias="span")
     span_docs = win.groupBy("span").agg(
         F.count("*").alias("span_df"))  # distinct per doc already
     per_doc = (

@@ -24,8 +24,9 @@ Parquet. Superstep ``s`` lives under ``<dir>/step=<s>/``:
 A superstep is committed iff its manifest exists; resume re-enters at the
 highest committed superstep and ignores any later step dir a killed run left
 behind (the re-run overwrites it). Supersteps are deterministic, so resume is
-exact. Older checkpoints also hold ``crawl_log/`` and ``metrics/`` dirs per
-step; resume never reads them.
+exact. A fresh crawl first clears any snapshot an earlier crawl left in the
+directory, so a later resume never mixes two crawls. Older checkpoints also
+hold ``crawl_log/`` and ``metrics/`` dirs per step; resume never reads them.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +61,18 @@ class CrawlCheckpoint:
             if name.startswith("_manifest_") and name.endswith(".json"):
                 steps.append(int(name[len("_manifest_"):-len(".json")]))
         return max(steps) if steps else None
+
+    def clear(self) -> None:
+        """Remove an earlier crawl's snapshot, before a fresh crawl writes
+        its first superstep: the manifests first (highest step first), then
+        the step dirs, so a kill mid-clear leaves no manifest pointing at
+        data of two crawls. Files outside the checkpoint layout stay."""
+        for name in sorted(os.listdir(self.dir), reverse=True):
+            if name.startswith("_manifest_"):
+                os.remove(os.path.join(self.dir, name))
+        for name in os.listdir(self.dir):
+            if name.startswith("step="):
+                shutil.rmtree(os.path.join(self.dir, name))
 
     # -- commit -------------------------------------------------------------
     def commit(self, step: int, frontier: DataFrame, seen_delta: DataFrame,

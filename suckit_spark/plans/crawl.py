@@ -252,6 +252,8 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
                                     for s in range(step))
                         if os.path.exists(p)]
     else:
+        if ckpt is not None:
+            ckpt.clear()
         frontier = _seed_frontier(spark, cfg)
         frontier_count = 1
         seen_deltas = [local_frame(spark, [(cfg.origin, 0)], SEEN_SCHEMA)]
@@ -299,20 +301,15 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
                     spark, robots_ops.collect_robots_rules(
                         pages, cfg.user_agent))
 
-    # Cookie state, live mode (reference cookie_store(true)): (a) a per-run
-    # token keys each worker process's accumulating CookieJar (full attribute
-    # semantics, same-worker requests); (b) a driver-held relay store folds
-    # every response's Set-Cookie — shipped back through the superstep
-    # parquet, one pruned column read — into the NEXT superstep's request
-    # headers, so a session cookie minted on one executor reaches requests on
-    # every other. Driver state is one entry per cookie-setting host (same
-    # scale envelope as the live robots dict).
-    live_jar_key = None
+    # Cookie state, live mode (reference cookie_store(true)): within a fetch
+    # task, the opener's CookieJar (full attribute semantics); across
+    # supersteps, a driver-held relay store folds every response's
+    # Set-Cookie — observed on the superstep's write job — into the NEXT
+    # superstep's request headers, so a session cookie minted on one
+    # executor reaches requests on every other. Driver state is one entry
+    # per cookie-setting host (same scale envelope as the live robots dict).
     live_cookie_store: dict = {}
     live_robots_delays: dict = {}
-    if cfg.live_fetch:
-        import uuid
-        live_jar_key = f"crawl-{uuid.uuid4().hex}"
 
     # rows of the frontier its ranking deferred, observed in the job that
     # ranked it; None for a frontier the previous superstep did not rank
@@ -479,7 +476,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
             # The HTTP fetch runs inside the page pipeline's Arrow stage: one
             # Python worker per fetch task, fetched rows never leave it.
             fetch = live_fetch_ops.make_fetch(
-                cfg, jar_key=live_jar_key,
+                cfg,
                 relay_cookies=live_fetch_ops.render_cookie_headers(
                     live_cookie_store),
                 host_delays=dict(live_robots_delays))
@@ -532,8 +529,8 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         # not honored — a /app-scoped cookie is also sent to /other on the
         # same host, and a Domain=.example.com cookie does NOT fan out to
         # sibling subdomains); Secure and deletion ARE honored (see
-        # merge_set_cookie_lines). Full RFC scoping lives in the per-worker
-        # CookieJar that handles same-executor requests.
+        # merge_set_cookie_lines). Full RFC scoping lives in each fetch
+        # task's CookieJar, for the requests within that task.
         for r in store_stats.get("set_cookie") or []:
             if r.h:
                 live_fetch_ops.merge_set_cookie_lines(

@@ -221,7 +221,8 @@ def test_live_jobs_partitioning(spark, site_server):
         "url string, fetch_url string, depth int, ext_depth int, "
         "superstep int, order_key array<long>")
     cfg = CrawlConfig(origin=f"{base}/index.html", jobs=1)
-    out = lf.fetch_frontier(frontier, cfg)
+    out = lf.fetch_partitions(frontier, cfg).mapInPandas(
+        lf.make_fetch(cfg), lf.FETCHED_SCHEMA)
     assert out.rdd.getNumPartitions() == 1
     assert out.count() == 2
 
@@ -343,7 +344,8 @@ def test_cookie_jar_in_fetch_stage(spark, cookie_server):
         "url string, fetch_url string, depth int, ext_depth int, "
         "superstep int, order_key array<long>")
     cfg = CrawlConfig(origin=f"{base}/index.html", jobs=1)
-    out = live_fetch.fetch_frontier(frontier, cfg, jar_key="test-jar-1")
+    out = live_fetch.fetch_partitions(frontier, cfg).mapInPandas(
+        live_fetch.make_fetch(cfg), live_fetch.FETCHED_SCHEMA)
     assert out.count() == 3
     cookies = [c for _, c in _CookieHandler.seen]
     assert cookies[0] is None
@@ -351,9 +353,9 @@ def test_cookie_jar_in_fetch_stage(spark, cookie_server):
 
 
 def test_cookie_jar_persists_across_crawl_supersteps(spark, cookie_server):
-    """End-to-end: the per-run jar_key keys a worker-process jar, so the
-    session cookie minted by superstep 0's response reaches the requests of
-    later supersteps (worker reuse keeps the process alive)."""
+    """End-to-end: the driver's cookie relay carries the session cookie
+    minted by superstep 0's response into the requests of later
+    supersteps."""
     base = cookie_server
     cfg = CrawlConfig(origin=f"{base}/index.html", continue_on_error=True,
                       live_fetch=True, jobs=1)
@@ -620,23 +622,6 @@ def test_relay_deletion_max_age_beats_expires():
         store, "h", "sid=dead; Expires=Wed, 01 Jan 2020 00:00:00 GMT")
     assert store["h"] == {}
     assert live_fetch.render_cookie_headers(store) == {}
-
-
-def test_process_jar_cache_is_bounded():
-    """One jar per crawl token, LRU-capped: a session running many live
-    crawls (bench loops, speed_regression) must not accumulate jars
-    forever in reused python workers."""
-    from suckit_spark.operators import live_fetch as lf
-
-    lf._PROCESS_JARS.clear()
-    jars = [lf._process_jar(f"crawl-{i}") for i in range(10)]
-    assert len(lf._PROCESS_JARS) == lf._PROCESS_JARS_MAX
-    # most-recent keys survive; re-access refreshes recency
-    assert "crawl-9" in lf._PROCESS_JARS and "crawl-0" not in lf._PROCESS_JARS
-    assert lf._process_jar("crawl-6") is jars[6]
-    lf._process_jar("crawl-new")
-    assert "crawl-6" in lf._PROCESS_JARS    # refreshed, not evicted
-    lf._PROCESS_JARS.clear()
 
 
 # ------------------------------- robots on a host discovered mid-crawl

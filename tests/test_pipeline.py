@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from suckit_spark import CrawlConfig, crawl, pipeline
 from suckit_spark.functions import htmlkit
 from suckit_spark.operators import webtext
+from suckit_spark.plans.checkpoint import CrawlCheckpoint
 from suckit_spark.sources import fixtures
 
 
@@ -66,10 +67,10 @@ def test_page_store_exposes_all_supersteps(spark):
     res.close()
 
 
-def _chain_pages(spark, n):
+def _chain_pages(spark, n, host="chain.example"):
     """A site whose page i links only to page i+1: a crawl of it runs n
     supersteps, one page each."""
-    url = "http://chain.example/p{}.html".format
+    url = f"http://{host}/p{{}}.html".format
     rows = [(url(i), f'<html><body>page {i} <a href="p{i + 1}.html">next</a>'
                      f'</body></html>'.encode(), "text/html", 200)
             for i in range(n)]
@@ -90,6 +91,28 @@ def test_reused_checkpoint_dir_reads_only_this_crawl(spark, tmp_path):
         "http://chain.example/p0.html", "http://chain.example/p1.html"]
     assert res.crawl_log.count() == res.mirror.count() == 2
     assert res.store.count() == 2
+
+
+def test_fresh_crawl_clears_a_reused_checkpoint_dir(spark, tmp_path):
+    """A fresh crawl into a checkpoint_dir that a longer crawl of another
+    site used starts a new snapshot: the last committed superstep is its
+    own, and a resume from it equals an uninterrupted crawl, with none of
+    the earlier crawl's frontier or seen urls."""
+    ck = str(tmp_path / "ck")
+    old_origin, old_pages = _chain_pages(spark, 8, host="old.example")
+    crawl(spark, CrawlConfig(origin=old_origin, checkpoint_dir=ck,
+                             max_supersteps=6), old_pages)
+    origin, pages = _chain_pages(spark, 8)
+    cfg = CrawlConfig(origin=origin, continue_on_error=True)
+    crawl(spark, cfg.with_(checkpoint_dir=ck, max_supersteps=2), pages)
+    assert CrawlCheckpoint(spark, ck).last_superstep() == 1
+
+    def state(res):
+        return ([r.url for r in res.crawl_log.orderBy("visit_seq").collect()],
+                {r.url for r in res.seen.collect()})
+
+    resumed = crawl(spark, cfg.with_(checkpoint_dir=ck), pages, resume=True)
+    assert state(resumed) == state(crawl(spark, cfg, pages))
 
 
 def _node_names(df):
