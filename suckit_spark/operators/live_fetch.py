@@ -346,7 +346,7 @@ def merge_set_cookie_lines(store: dict, host: str, lines: str) -> None:
     deletion (``Max-Age=0`` / past ``Expires`` evicts the entry instead of
     storing a dead value). Domain/Path scoping is deliberately simplified to
     whole-host — see the call site in plans/crawl.py; full RFC semantics
-    stay with the per-worker CookieJar, the relay exists for the common
+    stay with each fetch task's CookieJar, the relay exists for the common
     case: a session cookie that must reach every later request regardless
     of which executor fetched the page that minted it."""
     jar = store.setdefault(host, {})

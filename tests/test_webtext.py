@@ -290,6 +290,25 @@ def test_ivf_probe_all_cells_equals_exact(spark, emb):
     assert got == exact
 
 
+def test_ivf_matmul_assignment_is_pure_projection(spark, emb):
+    """The matmul assignment stays one Arrow-batched projection — no Join,
+    no Window, no Exchange — at a few centroids and at more than a thousand
+    (the centroid count no longer reaches the plan, only the UDF closure)."""
+    from suckit_spark.plans.crawl import _plan_string
+
+    dim = len(emb.first()["embedding"])
+    few = [(r["vec_id"], [float(v) for v in r["embedding"]])
+           for r in emb.limit(4).collect()]
+    many = [(i, [float((i * 7 + j) % 13) for j in range(dim)])
+            for i in range(1025)]
+    for cent_rows in (few, many):
+        plan = _plan_string(webtext.ivf_assign_cells(emb, cent_rows),
+                            "simple")
+        assert "ArrowEvalPython" in plan, plan
+        for node in ("Join", "Window", "Exchange"):
+            assert node not in plan, f"{node} in plan:\n{plan}"
+
+
 def test_ivf_topk_matmul_regime_2k_centroids(spark):
     """End-to-end ivf_topk at real-IVF centroid counts: 2k centroids over a
     4k synthetic corpus still returns the true top-k of the probed cells
