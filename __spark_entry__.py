@@ -473,12 +473,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["crawl_to_corpus"] = crawl_to_corpus
 
     def robots_join_gate(spark, sf):
-        # The scale-path robots gate (operators/robots.py:apply_robots_join):
-        # candidates derived from documents (doc i lives at
-        # http://<source>.example/doc/<i>.html), a deterministic rules table
-        # keyed by source number m = N % 3 (m=0 disallows /doc/1*, m=1
-        # disallows /doc/2* and /doc/3*, m=2 has no rules row = allow), one
-        # left equi-join on host + JVM prefix predicate — no broadcast dict.
+        # The robots gate (operators/robots.py:apply_robots_join) against a
+        # table-shaped rules frame, not a driver dict: candidates derived
+        # from documents (doc i lives at http://<source>.example/doc/<i>.html),
+        # a deterministic rules table keyed by source number m = N % 3 (m=0
+        # disallows /doc/1*, m=1 disallows /doc/2* and /doc/3*, m=2 has no
+        # rules row = allow), one left equi-join on host + JVM prefix
+        # predicate.
         from suckit_spark.operators import robots as robots_ops
         docs = _t(spark, sf, "documents")
         cand = docs.select(

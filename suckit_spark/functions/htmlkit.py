@@ -117,13 +117,19 @@ def is_html_type(data_type: str) -> bool:
 
 
 def content_disposition_filename(value: str | None) -> str | None:
-    """Substring after the first '=' (downloader.rs:95-104)."""
+    """Substring after the first '=' (downloader.rs:95-104). A name that is
+    empty, absolute or has a ``..`` component is not a file inside the
+    mirror, so it is no filename: ``None``, and the page is stored at its
+    own path."""
     if value is None:
         return None
     idx = value.find("=")
     if idx < 0:
         return None
-    return value[idx + 1 :]
+    name = value[idx + 1 :]
+    if not name or name.startswith("/") or ".." in name.split("/"):
+        return None
+    return name
 
 
 def needs_charset_conversion(charset: str) -> bool:

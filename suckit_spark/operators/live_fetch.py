@@ -291,8 +291,8 @@ def fetch_one(cfg: CrawlConfig, url: str, opener=None,
 def fetch_robots_txt(cfg: CrawlConfig, base: str) -> str:
     """GET ``<base>/robots.txt`` and return its text, or ``""`` when the
     host has none (non-200, empty, or unreachable — allow-by-default,
-    matching the candidate-time gate). Runs on the driver for small host
-    batches and inside the distributed robots stage for large ones."""
+    matching the candidate-time gate). Runs on the driver, in the crawl
+    loop's robots thread pool."""
     got = fetch_one(cfg, f"{base}/robots.txt")
     if got["found"] and got["status"] == 200 and got["html"]:
         return bytes(got["html"]).decode("utf-8", errors="replace")

@@ -1,18 +1,13 @@
 """robots.txt rules and the robots gate (north_rule extension — the
 reference has no robots support).
 
-One gate, :func:`apply_robots_join`: candidates are left-joined on host
-against a ``(host, prefixes)`` rules frame and filtered by a JVM-side prefix
-predicate, so gating starts no Python worker. The rules can live in two
-places, chosen by host count (``plans.crawl.ROBOTS_JOIN_THRESHOLD``):
-
-* **driver dict** (the default, small host counts): robots bodies are
-  collected once and parsed on the driver (:func:`collect_robots_rules`);
-  :func:`rules_frame` turns the dict into a JVM-local frame, which Catalyst
-  broadcasts into the join.
-* **distributed table** (the 10^8-host design point, where the dict itself
-  would be GBs): robots bodies are parsed executor-side into the frame
-  (:func:`robots_rules_df`) — no driver collect of the rules at all.
+The rules are one driver dict, host -> Disallow prefixes: a corpus crawl
+collects and parses every robots.txt row once (:func:`collect_robots_rules`),
+a live crawl fetches each host's robots.txt before the host's first fetch.
+:func:`rules_frame` ships the dict as a JVM-local ``(host, prefixes)`` frame,
+which Catalyst broadcasts into the one gate, :func:`apply_robots_join`: a
+left join on host and a JVM-side prefix predicate, so gating starts no
+Python worker.
 
 Disallowed URLs are dropped at discovery time — never enqueued, never added
 to the seen set (they remain eligible if the rules change on a later crawl).
@@ -26,7 +21,6 @@ share the group that follows them.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
@@ -34,7 +28,7 @@ from ..functions import urlkit
 from ..schemas import local_frame
 from .frontier import host_col
 
-#: the rules frame both places produce: Disallow prefixes per host
+#: the rules frame: Disallow prefixes per host
 RULES_SCHEMA = StructType([
     StructField("host", StringType()),
     StructField("prefixes", ArrayType(StringType())),
@@ -44,58 +38,14 @@ RULES_SCHEMA = StructType([
 _PATH_RE = r"^[^:/?#]+://[^/?#]*([^?#]*)"
 
 
-def parse_robots(content: str, user_agent: str | None = None) -> list[str]:
-    """Extract the Disallow path prefixes that apply to this crawl.
-
-    Groups whose agent token matches ``user_agent`` by case-insensitive
-    substring win; ``*`` groups apply only when no specific group matched.
-    ``user_agent=None`` keeps only the ``*`` groups (an anonymous probe).
-    """
-    groups: list[tuple[list[str], list[str]]] = []  # (agent tokens, prefixes)
+def _groups(content: str):
+    """Yield ``(agents, prefixes, delay)`` per rule group of a robots.txt:
+    the lower-cased tokens of a run of ``User-agent`` lines, the non-empty
+    ``Disallow`` values after it, and its last parsable ``Crawl-delay``
+    (``None`` when there is none or it is negative). Lines before the first
+    ``User-agent`` belong to no group."""
     agents: list[str] = []
     prefixes: list[str] = []
-    in_agent_run = False
-    for raw_line in content.splitlines():
-        line = raw_line.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, value = line.partition(":")
-        key = key.strip().lower()
-        value = value.strip()
-        if key == "user-agent":
-            if not in_agent_run:
-                if agents:
-                    groups.append((agents, prefixes))
-                agents, prefixes = [], []
-                in_agent_run = True
-            agents.append(value.lower())
-        else:
-            in_agent_run = False
-            if key == "disallow" and value:
-                prefixes.append(value)
-    if agents:
-        groups.append((agents, prefixes))
-
-    ua = (user_agent or "").lower()
-    specific: list[str] = []
-    star: list[str] = []
-    for toks, pfx in groups:
-        if ua and any(t and t != "*" and t in ua for t in toks):
-            specific.extend(pfx)
-        if "*" in toks:
-            star.extend(pfx)
-    return specific if specific else star
-
-
-def parse_crawl_delay(content: str,
-                      user_agent: str | None = None) -> float | None:
-    """Extract the ``Crawl-delay`` (seconds) that applies to this crawl —
-    same group-selection semantics as :func:`parse_robots` (specific-agent
-    groups win, ``*`` is the fallback; the directive is a de-facto standard,
-    not in RFC 9309, but honored by most polite crawlers). Returns ``None``
-    when no applicable group sets one or the value does not parse."""
-    groups: list[tuple[list[str], float | None]] = []
-    agents: list[str] = []
     delay: float | None = None
     in_agent_run = False
     for raw_line in content.splitlines():
@@ -108,40 +58,72 @@ def parse_crawl_delay(content: str,
         if key == "user-agent":
             if not in_agent_run:
                 if agents:
-                    groups.append((agents, delay))
-                agents, delay = [], None
+                    yield agents, prefixes, delay
+                agents, prefixes, delay = [], [], None
                 in_agent_run = True
             agents.append(value.lower())
-        else:
-            in_agent_run = False
-            if key == "crawl-delay":
-                try:
-                    parsed = float(value)
-                    delay = parsed if parsed >= 0 else None
-                except ValueError:
-                    pass
+            continue
+        in_agent_run = False
+        if key == "disallow" and value:
+            prefixes.append(value)
+        elif key == "crawl-delay":
+            try:
+                parsed = float(value)
+            except ValueError:
+                continue
+            delay = parsed if parsed >= 0 else None
     if agents:
-        groups.append((agents, delay))
+        yield agents, prefixes, delay
 
+
+def _names_agent(agents: list[str], user_agent: str | None) -> bool:
+    """True when a group names this crawl: one of its tokens other than
+    ``*`` is a substring of the lower-cased UA."""
     ua = (user_agent or "").lower()
+    return bool(ua) and any(t and t != "*" and t in ua for t in agents)
+
+
+def parse_robots(content: str, user_agent: str | None = None) -> list[str]:
+    """Extract the Disallow path prefixes that apply to this crawl.
+
+    Groups whose agent token matches ``user_agent`` by case-insensitive
+    substring win; ``*`` groups apply only when no specific group matched.
+    ``user_agent=None`` keeps only the ``*`` groups (an anonymous probe).
+    """
+    specific: list[str] = []
+    star: list[str] = []
+    for agents, prefixes, _ in _groups(content):
+        if _names_agent(agents, user_agent):
+            specific.extend(prefixes)
+        if "*" in agents:
+            star.extend(prefixes)
+    return specific if specific else star
+
+
+def parse_crawl_delay(content: str,
+                      user_agent: str | None = None) -> float | None:
+    """Extract the ``Crawl-delay`` (seconds) that applies to this crawl —
+    same group-selection semantics as :func:`parse_robots` (specific-agent
+    groups win, ``*`` is the fallback; the directive is a de-facto standard,
+    not in RFC 9309, but honored by most polite crawlers); the strictest of
+    several applicable groups wins. Returns ``None`` when no applicable
+    group sets one or the value does not parse."""
     specific: float | None = None
     star: float | None = None
-    for toks, d in groups:
-        if d is None:
+    for agents, _, delay in _groups(content):
+        if delay is None:
             continue
-        if ua and any(t and t != "*" and t in ua for t in toks):
-            specific = max(specific or 0.0, d)
-        if "*" in toks:
-            star = max(star or 0.0, d)
+        if _names_agent(agents, user_agent):
+            specific = max(specific or 0.0, delay)
+        if "*" in agents:
+            star = max(star or 0.0, delay)
     return specific if specific is not None else star
 
 
 def collect_robots_rules(pages: DataFrame,
                          user_agent: str | None = None) -> dict[str, list[str]]:
-    """One pass over the corpus for ``*/robots.txt`` rows -> host -> prefixes.
-    Driver-side (:func:`rules_frame` ships the dict to the gate) — use
-    :func:`robots_rules_df` when the host count makes the dict
-    unreasonable."""
+    """One pass over the corpus for ``*/robots.txt`` rows -> host -> prefixes,
+    the driver dict :func:`rules_frame` ships to the gate."""
     rows = (
         pages.filter(F.col("url").endswith("/robots.txt"))
         .select("url", "html")
@@ -155,33 +137,6 @@ def collect_robots_rules(pages: DataFrame,
         rules[host] = parse_robots(
             bytes(r.html).decode("utf-8", errors="replace"), user_agent)
     return rules
-
-
-def robots_rules_df(pages: DataFrame,
-                    user_agent: str | None = None) -> DataFrame:
-    """Distributed rules table ``(host string, prefixes array<string>)``:
-    robots bodies are parsed where they live (one Arrow stage; the parse is
-    inherently per-document) and the result never touches the driver. The
-    scale path behind :func:`apply_robots_join`."""
-    import pyarrow  # noqa: F401  (arrow transport for the parse stage)
-
-    raw = (pages.filter(F.col("url").endswith("/robots.txt"))
-           .select("url", "html"))
-
-    def parse_batch(batches):
-        for pdf in batches:
-            hosts, prefixes = [], []
-            for u, body in zip(pdf["url"], pdf["html"]):
-                host = urlkit.url_host(u)
-                if host is None or body is None:
-                    continue
-                hosts.append(host)
-                prefixes.append(parse_robots(
-                    bytes(body).decode("utf-8", errors="replace"),
-                    user_agent))
-            yield pd.DataFrame({"host": hosts, "prefixes": prefixes})
-
-    return raw.mapInPandas(parse_batch, RULES_SCHEMA)
 
 
 def rules_frame(spark, rules: dict[str, list[str]]) -> DataFrame:

@@ -15,7 +15,7 @@ from collections import deque
 from dataclasses import dataclass, field
 
 from .config import INFINITE_DEPTH, CrawlConfig
-from .functions import urlkit
+from .functions import htmlkit, urlkit
 from .operators.page_pipeline import fetch_result, process_page
 
 
@@ -97,10 +97,9 @@ def crawl_oracle(cfg: CrawlConfig, pages: dict[str, dict]) -> OracleResult:
 
         path = path_map[url]
         if not cfg.dry_run and download:
-            if page["kind"] == "other" and row.get("content_disposition"):
-                from .functions import htmlkit
-                filename = htmlkit.content_disposition_filename(
-                    row.get("content_disposition"))
+            filename = htmlkit.content_disposition_filename(
+                row.get("content_disposition"))
+            if page["kind"] == "other" and filename is not None:
                 res.files[filename] = page["content"]
                 res.symlinks[path] = urlkit.relative_link(path, filename)
             else:

@@ -42,6 +42,7 @@ import functools
 import os
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
@@ -62,14 +63,6 @@ from ..functions import urlkit
 from . import parquet_sink
 from .checkpoint import CrawlCheckpoint
 
-#: where the robots rules live, by scale (operators/robots.py); the gate is
-#: the same equi-join on host either way. When the corpus has at least this
-#: many robots.txt hosts (live mode: once the crawl has fetched that many),
-#: the rules are a distributed ``(host, prefixes)`` table (no driver collect
-#: of the rules); below it, a driver dict shipped as a JVM-local frame that
-#: Catalyst broadcasts.
-ROBOTS_JOIN_THRESHOLD = 10_000
-
 #: the in-memory seen-delta union is compacted into one materialized table
 #: once it holds more than this many deltas (see the loop's compaction step).
 SEEN_COMPACT_INTERVAL = 16
@@ -78,16 +71,9 @@ SEEN_COMPACT_INTERVAL = 16
 #: spreads over this many tasks (``frontier.apply_host_budget``; exact).
 SKEW_SALT_BUCKETS = 16
 
-#: live-mode robots.txt fetches for hosts a superstep introduces run on the
-#: driver up to this many (a Spark job costs more than it saves for a
-#: handful); larger waves distribute the fetches as one Arrow stage.
-_ROBOTS_DRIVER_FETCH_MAX = 4
-
 
 class CrawlAbort(RuntimeError):
     """Fetch failure without --continue-on-error (scraper.rs:275-281)."""
-
-
 
 
 @dataclass
@@ -129,8 +115,6 @@ class CrawlResult:
         """Write the actual file tree (disk.rs parity): bytes per path, plus
         symlinks for content-disposition filenames. Executor-side
         ``foreachPartition`` — no driver collect."""
-        import os
-
         def write_partition(rows):
             for r in rows:
                 if r.filename:
@@ -274,32 +258,21 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
     # approximate mode's BloomState; None while the crawl dedups exactly
     sketch = None
 
-    # robots.txt: every gate is robots_ops.apply_robots_join against the
-    # (host, prefixes) rules frame; where the rules live decides how the
-    # frame is built (robots.py module doc).
+    # robots.txt: the rules are one driver dict, host -> Disallow prefixes,
+    # shipped to the one gate (robots_ops.apply_robots_join) as a JVM-local
+    # rules frame. Corpus mode reads every robots.txt row once, here; live
+    # mode fetches each host's robots.txt before the host's first fetch.
     robots_rules: DataFrame | None = None
-    live_robots_rules: dict | None = None
-    # live dict mode: the (base, host) pairs of the next frontier, observed
-    # on the previous superstep's new_urls checkpoint; None on the first
+    live_robots_rules: dict = {}
+    # per-host Crawl-delay floors from the same robots.txt bodies
+    live_robots_delays: dict = {}
+    # live mode: the (base, host) pairs of the next frontier, observed on
+    # the previous superstep's new_urls checkpoint; None on the first
     # superstep of a run, which collects them from its frontier instead
     robots_bases: list | None = None
-    if cfg.respect_robots:
-        if cfg.live_fetch:
-            # live mode: rules are fetched over HTTP per newly-seen host,
-            # incrementally, inside the loop (one robots.txt per host ever).
-            live_robots_rules = {}
-        else:
-            # By scale: a driver dict, shipped as a JVM-local frame, while
-            # the robots host count is small; a distributed table past
-            # ROBOTS_JOIN_THRESHOLD, where the dict itself would be GBs.
-            robots_urls = pages.filter(F.col("url").endswith("/robots.txt"))
-            if robots_urls.count() >= ROBOTS_JOIN_THRESHOLD:
-                robots_rules = robots_ops.robots_rules_df(
-                    pages, cfg.user_agent).localCheckpoint(eager=True)
-            else:
-                robots_rules = robots_ops.rules_frame(
-                    spark, robots_ops.collect_robots_rules(
-                        pages, cfg.user_agent))
+    if cfg.respect_robots and not cfg.live_fetch:
+        robots_rules = robots_ops.rules_frame(
+            spark, robots_ops.collect_robots_rules(pages, cfg.user_agent))
 
     # Cookie state, live mode (reference cookie_store(true)): within a fetch
     # task, the opener's CookieJar (full attribute semantics); across
@@ -309,7 +282,6 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
     # executor reaches requests on every other. Driver state is one entry
     # per cookie-setting host (same scale envelope as the live robots dict).
     live_cookie_store: dict = {}
-    live_robots_delays: dict = {}
 
     # rows of the frontier its ranking deferred, observed in the job that
     # ranked it; None for a frontier the previous superstep did not rank
@@ -368,99 +340,38 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         if cfg.live_fetch:
             from ..operators import live_fetch as live_fetch_ops
             if cfg.respect_robots:
-                # Fetch robots.txt for hosts this superstep introduces.
-                # Where the rules live depends on host count (the same scale
-                # choice corpus mode makes): below ROBOTS_JOIN_THRESHOLD the
-                # driver holds a small rules dict (one entry per host),
-                # rebuilt into a rules frame only when it grew; PAST the
-                # threshold the rules live in a distributed (host, prefixes)
-                # DataFrame fed directly by the distributed robots fetches —
-                # the driver never stores a prefix again (a 10^8-host live
-                # crawl would otherwise grow a GB-scale dict and re-ship it
-                # every wave). Crawl-delays stay driver-side either way: one
-                # float per host that declares one — rare, and the fetch
-                # stage needs them as a plain dict.
-                bases_df = (
-                    selected.select(_robots_base(F.col("fetch_url")).alias("b"))
-                    .filter(F.col("b.h").isNotNull()).distinct()
-                    .select("b.base", "b.h"))
-                if live_robots_rules is not None:
-                    # The next frontier's hosts are the hosts of the gated
-                    # new_urls (observed below) plus those of deferred rows,
-                    # which this superstep's selected rows already cover.
-                    if robots_bases is None:
-                        robots_bases = bases_df.collect()
-                    new_hosts = [
-                        (r.base, r.h) for r in robots_bases
-                        if r.h not in live_robots_rules]
-                else:
-                    # join mode: membership lives in the rules table; only
-                    # genuinely new hosts ever reach the driver (one tiny
-                    # row each, per wave).
-                    new_hosts = [
-                        (r.base, r.h) for r in bases_df.join(
-                            robots_rules.select(
-                                F.col("host").alias("h")),
-                            on="h", how="left_anti").collect()]
-                grew = bool(new_hosts)
-                # A frontier wave can introduce thousands of hosts; fetching
-                # each robots.txt from the driver would serialize the
-                # superstep on network latency. Past a handful, distribute
-                # the fetches as one Arrow stage (jobs-bounded, the same
-                # parallelism envelope as the page fetch itself); the collect
-                # is one tiny row per new host. Below the threshold a Spark
-                # job costs more than it saves.
-                if len(new_hosts) <= _ROBOTS_DRIVER_FETCH_MAX:
-                    fetched_txt = [
-                        (h, live_fetch_ops.fetch_robots_txt(cfg, base))
-                        for base, h in new_hosts]
-                else:
-                    bdf = local_frame(
-                        spark, new_hosts, "base string, h string").repartition(
-                        min(len(new_hosts), max(cfg.jobs, 1) * 4))
-                    cfg_ser = cfg
-
-                    def _fetch_robots(batches):
-                        from ..operators import live_fetch as lf
-                        for pdf in batches:
-                            pdf = pdf.assign(txt=[
-                                lf.fetch_robots_txt(cfg_ser, b)
-                                for b in pdf["base"]])
-                            yield pdf[["h", "txt"]]
-
-                    fetched_txt = [
-                        (r.h, r.txt) for r in bdf.mapInPandas(
-                            _fetch_robots, "h string, txt string").collect()]
-                new_rules = {}
-                for h, txt in fetched_txt:
-                    prefixes = robots_ops.parse_robots(txt, cfg.user_agent)
-                    if live_robots_rules is not None:
-                        live_robots_rules[h] = prefixes
-                    else:
-                        new_rules[h] = prefixes
-                    # de-facto Crawl-delay directive: per-host politeness
-                    # floor, enforced in the fetch stage (stricter of this
-                    # and cfg.delay wins)
-                    d = robots_ops.parse_crawl_delay(txt, cfg.user_agent)
-                    if d is not None:
-                        live_robots_delays[h] = d
-                if (live_robots_rules is not None
-                        and len(live_robots_rules) >= ROBOTS_JOIN_THRESHOLD):
-                    # Threshold crossing: seed the distributed rules table
-                    # from the dict, then stop maintaining the dict. (At
-                    # real scale the union-per-wave below is an append to a
-                    # rules TABLE — Iceberg append in production; an
-                    # eagerly-materialized localCheckpoint caps lineage in
-                    # the sandbox.)
-                    robots_rules = robots_ops.rules_frame(
-                        spark, live_robots_rules).localCheckpoint(eager=True)
-                    live_robots_rules = None
-                elif live_robots_rules is None and new_rules:
-                    robots_rules = robots_rules.unionByName(
-                        robots_ops.rules_frame(spark, new_rules)
-                    ).localCheckpoint(eager=True)
-                elif live_robots_rules is not None and (
-                        grew or robots_rules is None):
+                # Fetch robots.txt for the hosts this wave introduces, on
+                # a pool of at most 4 driver threads per fetch job: a Spark
+                # job would cost more than the few GETs. The next
+                # frontier's hosts are the hosts of the gated new_urls
+                # (observed below) plus those of deferred rows, which this
+                # superstep's selected rows already cover.
+                if robots_bases is None:
+                    bases_df = (
+                        selected.select(
+                            _robots_base(F.col("fetch_url")).alias("b"))
+                        .filter(F.col("b.h").isNotNull()).distinct()
+                        .select("b.base", "b.h"))
+                    robots_bases = bases_df.collect()
+                new_hosts = [(r.base, r.h) for r in robots_bases
+                             if r.h not in live_robots_rules]
+                if new_hosts:
+                    with ThreadPoolExecutor(min(
+                            len(new_hosts), max(cfg.jobs, 1) * 4)) as pool:
+                        bodies = list(pool.map(
+                            lambda base: live_fetch_ops.fetch_robots_txt(
+                                cfg, base),
+                            [base for base, _ in new_hosts]))
+                    for (_, h), txt in zip(new_hosts, bodies):
+                        live_robots_rules[h] = robots_ops.parse_robots(
+                            txt, cfg.user_agent)
+                        # de-facto Crawl-delay directive: per-host
+                        # politeness floor, enforced in the fetch stage
+                        # (stricter of this and cfg.delay wins)
+                        d = robots_ops.parse_crawl_delay(txt, cfg.user_agent)
+                        if d is not None:
+                            live_robots_delays[h] = d
+                if new_hosts or robots_rules is None:
                     robots_rules = robots_ops.rules_frame(
                         spark, live_robots_rules)
                 # Re-gate the SELECTED rows with the refreshed rules before
@@ -593,13 +504,13 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         # The new-seen and next-frontier row counts ride the checkpoint's
         # materialization job as an Observation — no separate aggregation
         # job per superstep (the flat "rest" barrier the N->4N scaling
-        # curve pays at every level). Live dict-mode robots observes the
+        # curve pays at every level). Live-mode robots observes the
         # next frontier's (base, host) pairs there too.
         fetch_url_col = F.split(F.col("url"), "#", 2).getItem(0)
         counts_obs = Observation(f"new_{step}")
         bases_obs = ([F.collect_set(F.when(
             gate_pred, _robots_base(fetch_url_col))).alias("bases")]
-            if live_robots_rules is not None else [])
+            if cfg.live_fetch and cfg.respect_robots else [])
         new_urls = new_urls.observe(
             counts_obs,
             F.count(F.lit(1)).alias("n"),
@@ -608,7 +519,7 @@ def _crawl(spark: SparkSession, cfg: CrawlConfig, pages: DataFrame,
         new_urls = new_urls.localCheckpoint(eager=True)
         t_cand = time.monotonic() - t_cand0
         counts = counts_obs.get
-        if live_robots_rules is not None:
+        if cfg.live_fetch and cfg.respect_robots:
             robots_bases = [b for b in counts["bases"] if b.h is not None]
 
         next_frontier = (

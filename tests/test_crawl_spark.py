@@ -143,6 +143,32 @@ def test_content_disposition_parity(spark, tmp_path):
     assert link.resolve().read_bytes() == b"MP3DATA"
 
 
+def test_content_disposition_cannot_escape_mirror(spark, tmp_path):
+    """A server-sent Content-Disposition name that is absolute or climbs out
+    with ``..`` writes nothing outside the output dir: the page is saved at
+    its canonical path, like a page sent with no filename."""
+    abs_name = tmp_path / "abs" / "escape.bin"
+    index = (b'<html><body><a href="up.bin">u</a>'
+             b'<a href="abs.bin">a</a></body></html>')
+    rows = [
+        fixtures._row("http://0.0.0.0/", index, "text/html"),
+        fixtures._row("http://0.0.0.0/up.bin", b"UP", "application/x-bin",
+                      content_disposition="attachment; filename=../escape.bin"),
+        fixtures._row("http://0.0.0.0/abs.bin", b"ABS", "application/x-bin",
+                      content_disposition=f"attachment; filename={abs_name}"),
+    ]
+    oracle, result = run_both(spark, {}, rows=rows)
+    out = tmp_path / "out"
+    result.materialize_mirror(str(out))
+    assert [p.name for p in tmp_path.iterdir()] == ["out"]
+    for name, body in (("up.bin", b"UP"), ("abs.bin", b"ABS")):
+        saved = out / "0.0.0.0" / name
+        assert not saved.is_symlink()
+        assert saved.read_bytes() == body
+    assert_parity(oracle, result)
+    result.close()
+
+
 def test_error_abort(spark):
     rows = [r for r in fixtures.site_a() if r["url"] != "http://0.0.0.0/file.txt"]
     cfg = CrawlConfig(origin="http://0.0.0.0/")

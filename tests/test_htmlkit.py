@@ -96,6 +96,12 @@ def test_content_disposition_filename():
     assert htmlkit.content_disposition_filename(
         "attachment; filename=x.mp3") == "x.mp3"
     assert htmlkit.content_disposition_filename(None) is None
+    # a name that is no file inside the mirror is no filename
+    for name in ("../escape.bin", "/tmp/abs/escape.bin", ""):
+        assert htmlkit.content_disposition_filename(
+            f"attachment; filename={name}") is None
+    assert htmlkit.content_disposition_filename(
+        "attachment; filename=sub/x..y.mp3") == "sub/x..y.mp3"
 
 
 def test_charset_round_trip_windows_1252():

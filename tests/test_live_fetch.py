@@ -677,74 +677,6 @@ def test_live_robots_gate_on_midcrawl_host(spark):
             srv.server_close()
 
 
-def test_live_robots_join_gate_above_threshold(spark, monkeypatch):
-    """Past ROBOTS_JOIN_THRESHOLD, live mode stops growing the driver rules
-    dict and gates through the distributed (host, prefixes) table — same
-    crawl as the dict path, wire-identical robots behavior (the disallowed
-    page on the mid-crawl host is never fetched)."""
-    srv_a = ThreadingHTTPServer(("127.0.0.1", 0), _SiteHandler)
-    srv_b_handler = type("_SiteHandlerB2", (_SiteHandler,), {
-        "site": {}, "seen_headers": []})
-    srv_b = ThreadingHTTPServer(("127.0.0.2", 0), srv_b_handler)
-    base_a = f"http://127.0.0.1:{srv_a.server_address[1]}"
-    base_b = f"http://127.0.0.2:{srv_b.server_address[1]}"
-    seen_b_paths: list[str] = []
-
-    class _RecordingB2(srv_b_handler):
-        def do_GET(self):
-            seen_b_paths.append(self.path)
-            super().do_GET()
-    srv_b.RequestHandlerClass = _RecordingB2
-
-    _SiteHandler.site = {
-        "/index.html": (
-            f'<html><body><a href="{base_b}/blocked.html">x</a>'
-            f'<a href="{base_b}/open.html">y</a>'
-            f'<a href="a.html">a</a></body></html>').encode(),
-        "/a.html": b"<html><body><p>leaf</p></body></html>",
-        "/robots.txt": b"User-agent: *\nDisallow: /private\n",
-    }
-    _SiteHandler.seen_headers = []
-    srv_b_handler.site = {
-        "/robots.txt": b"User-agent: *\nDisallow: /blocked\n",
-        "/blocked.html": b"<html><body>never fetched</body></html>",
-        "/open.html": b"<html><body>fine</body></html>",
-    }
-    for srv in (srv_a, srv_b):
-        threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        from suckit_spark.schemas import PAGES_SCHEMA
-
-        def run(threshold):
-            seen_b_paths.clear()
-            monkeypatch.setattr(
-                "suckit_spark.plans.crawl.ROBOTS_JOIN_THRESHOLD", threshold)
-            cfg = CrawlConfig(origin=f"{base_a}/index.html", ext_depth=-1,
-                              continue_on_error=True, respect_robots=True,
-                              live_fetch=True)
-            res = crawl(spark, cfg, spark.createDataFrame([], PAGES_SCHEMA))
-            log = sorted((r.url, r.status) for r in res.crawl_log.collect())
-            seen = {r.url for r in res.seen.collect()}
-            res.close()
-            return log, seen, list(seen_b_paths)
-
-        # threshold=1: the dict crosses to the join table after host A's
-        # rules land; host B (mid-crawl) is handled entirely in join mode.
-        log_join, seen_join, b_paths_join = run(1)
-        log_dict, seen_dict, b_paths_dict = run(float("inf"))
-        assert log_join == log_dict
-        assert seen_join == seen_dict
-        assert f"{base_b}/open.html" in {u for u, _ in log_join}
-        assert f"{base_b}/blocked.html" not in {u for u, _ in log_join}
-        # wire-level: host B never served the blocked page on either path
-        assert "/blocked.html" not in set(b_paths_join + b_paths_dict)
-        assert "/open.html" in set(b_paths_join)
-    finally:
-        for srv in (srv_a, srv_b):
-            srv.shutdown()
-            srv.server_close()
-
-
 # ------------------------------------- loopback bench harness (round 3, S8)
 
 def test_loopback_site_deterministic_and_served():
@@ -818,12 +750,12 @@ def test_live_bench_point_runs(spark, monkeypatch):
     assert "load_avg_1m" in out["trials"][0]
 
 
-def test_live_robots_distributed_fetch_many_hosts(spark):
-    """A superstep introducing more than _ROBOTS_DRIVER_FETCH_MAX hosts takes
-    the distributed robots path (one Arrow stage fetches every new host's
-    robots.txt in parallel instead of a serial driver loop). One server bound
-    to 0.0.0.0 serves 8 loopback aliases (127.0.0.1-8) host-aware via the
-    Host header; even-numbered hosts disallow their page."""
+def test_live_robots_fetch_many_hosts(spark):
+    """A superstep introducing 7 hosts fetches their robots.txt in the
+    driver's bounded thread pool, each host's exactly once. One
+    server bound to 0.0.0.0 serves 8 loopback aliases (127.0.0.1-8)
+    host-aware via the Host header; even-numbered hosts disallow their
+    page."""
     class _MultiHost(BaseHTTPRequestHandler):
         port = None
         requested: list[tuple[str, str]] = []
@@ -864,13 +796,11 @@ def test_live_robots_distributed_fetch_many_hosts(spark):
     _MultiHost.requested = []
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
-        from suckit_spark.plans import crawl as crawl_plan
         from suckit_spark.schemas import PAGES_SCHEMA
         port = _MultiHost.port
         cfg = CrawlConfig(origin=f"http://127.0.0.1:{port}/index.html",
                           ext_depth=-1, continue_on_error=True,
                           respect_robots=True, live_fetch=True, jobs=4)
-        assert 7 > crawl_plan._ROBOTS_DRIVER_FETCH_MAX  # takes the Arrow path
         res = crawl(spark, cfg, spark.createDataFrame([], PAGES_SCHEMA))
         visited = {r.url for r in res.crawl_log.collect()}
         for x in (3, 5, 7):
@@ -879,10 +809,12 @@ def test_live_robots_distributed_fetch_many_hosts(spark):
             assert f"http://127.0.0.{x}:{port}/p.html" not in visited
         # wire-level: every even host served ONLY robots.txt, each host's
         # robots fetched exactly once (the rules dict deduplicates)
-        for x in (2, 4, 6, 8):
+        for x in range(1, 9):
             paths = [p for h, p in _MultiHost.requested
                      if h == f"127.0.0.{x}"]
-            assert paths == ["/robots.txt"]
+            assert paths.count("/robots.txt") == 1, (x, paths)
+            if x % 2 == 0:
+                assert paths == ["/robots.txt"]
         res.close()
     finally:
         srv.shutdown()

@@ -83,12 +83,12 @@ Disallow: /crate/
     assert parse_robots(multi, "suckit") == ["/a/", "/b/"]
 
 
-def test_robots_join_gate_matches_dict_gate(spark):
-    """Unit level: the one robots gate admits the same urls whether its
-    rules frame was built from the driver dict or parsed executor-side into
-    the distributed table — including urls ``java.net.URI`` rejects (a
-    ``|`` in the path), ports, userinfo and fragments, which the gate must
-    read as ``urlsplit`` does instead of raising."""
+def test_robots_join_gate_over_dict_frame(spark):
+    """Unit level: the one robots gate, over the rules frame built from the
+    driver dict, admits exactly the allowed urls — including urls
+    ``java.net.URI`` rejects (a ``|`` in the path), ports, userinfo and
+    fragments, which the gate must read as ``urlsplit`` does instead of
+    raising."""
     from suckit_spark.operators import robots as robots_ops
 
     rows = _site_with_robots() + [
@@ -115,13 +115,11 @@ def test_robots_join_gate_matches_dict_gate(spark):
     cands = spark.createDataFrame(
         [(u,) for u in sorted(allowed | blocked)], "url string")
 
-    dict_frame = robots_ops.rules_frame(
+    rules = robots_ops.rules_frame(
         spark, robots_ops.collect_robots_rules(pages, "suckit"))
-    table = robots_ops.robots_rules_df(pages, "suckit")
-    for rules in (dict_frame, table):
-        gated = robots_ops.apply_robots_join(cands, rules)
-        assert {r.url for r in gated.collect()} == allowed
-        assert gated.columns == cands.columns  # helper cols dropped
+    gated = robots_ops.apply_robots_join(cands, rules)
+    assert {r.url for r in gated.collect()} == allowed
+    assert gated.columns == cands.columns  # helper cols dropped
 
 
 def test_crawl_superstep_plans_are_python_free(spark, monkeypatch):
@@ -159,28 +157,6 @@ def test_crawl_superstep_plans_are_python_free(spark, monkeypatch):
             assert "BatchEvalPython" not in plan
     finally:
         res.close()
-
-
-def test_crawl_join_path_matches_broadcast_path(spark, monkeypatch):
-    """Whole-crawl equivalence: ROBOTS_JOIN_THRESHOLD=0 forces the rules-table
-    join gate; the crawl must equal the broadcast-dict crawl exactly."""
-    rows = _site_with_robots()
-    base = CrawlConfig(origin="http://0.0.0.0/", continue_on_error=True,
-                       respect_robots=True)
-    dict_res = crawl(spark, base, fixtures.pages_df(spark, rows))
-    monkeypatch.setattr("suckit_spark.plans.crawl.ROBOTS_JOIN_THRESHOLD", 0)
-    join_res = crawl(spark, base, fixtures.pages_df(spark, rows))
-    dict_log = [(r.url, r.status) for r in
-                dict_res.crawl_log.orderBy("visit_seq").collect()]
-    join_log = [(r.url, r.status) for r in
-                join_res.crawl_log.orderBy("visit_seq").collect()]
-    assert join_log == dict_log
-    assert ({r.url for r in join_res.seen.collect()}
-            == {r.url for r in dict_res.seen.collect()})
-    assert "http://0.0.0.0/private/secret.html" not in {
-        r.url for r in join_res.seen.collect()}
-    dict_res.close()
-    join_res.close()
 
 
 # --------------------------------------------------- Crawl-delay directive

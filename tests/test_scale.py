@@ -691,6 +691,38 @@ def test_superstep_job_count_pinned(spark):
     res.close()
 
 
+def test_corpus_robots_job_count_pinned(spark):
+    """What ``respect_robots`` costs a corpus crawl in driver jobs: site_a
+    plus a robots.txt that disallows nothing it links, crawled with and
+    without the gate. The two crawls visit the same pages. Measured: the
+    robots crawl runs 4 more jobs, one collect of the robots rows and one
+    broadcast of the rules frame per superstep (3); any probe of the robots
+    rows before the collect would show here."""
+    from suckit_spark.sources import fixtures
+
+    sc = spark.sparkContext
+    rows = fixtures.site_a() + [fixtures._row(
+        "http://0.0.0.0/robots.txt",
+        b"User-agent: *\nDisallow: /nothing-linked/\n", "text/plain")]
+    pages = pages_df(spark, rows)
+    jobs, logs = {}, {}
+    for robots in (False, True):
+        cfg = CrawlConfig(origin="http://0.0.0.0/", continue_on_error=True,
+                          respect_robots=robots)
+        group = f"corpus_robots_pin_{robots}"
+        sc.setJobGroup(group, "corpus robots job cost")
+        try:
+            res = crawl(spark, cfg, pages)
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[robots] = len(sc.statusTracker().getJobIdsForGroup(group))
+        logs[robots] = sorted(
+            (r.url, r.status) for r in res.crawl_log.collect())
+        res.close()
+    assert logs[True] == logs[False]
+    assert jobs[True] - jobs[False] == 4, jobs
+
+
 def test_live_superstep_job_count_pinned(spark, tmp_path):
     """Driver-job budget of a durable live crawl: a loopback site with a
     robots.txt Disallow, a host budget that defers every wave and a
